@@ -645,7 +645,8 @@ def _cpu_sample() -> tuple[float, float] | None:
     deltas between samples give the steal share of wanted cycles during
     each probe interval."""
     try:
-        f = open("/proc/stat").readline().split()
+        with open("/proc/stat") as fh:
+            f = fh.readline().split()
         u, n, s = int(f[1]), int(f[2]), int(f[3])
         steal = int(f[8]) if len(f) > 8 else 0
         return (float(u + n + s), float(steal))
@@ -1172,9 +1173,9 @@ def main() -> None:
     # The per-query record now ALSO lands at a core-count-distinct path,
     # and queries_path points THERE; bench_results.json is still written
     # for back-compat with older tooling.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
-    if not str(cpus).isdigit():  # e.g. "*" (all cores)
-        cpus = str(os.cpu_count())
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if not cpus.isdigit():  # unset or "*": the cores this process may use
+        cpus = str(len(os.sched_getaffinity(0)))
     result["cpus"] = int(cpus)
     scratch_c = f"bench_results_c{cpus}.json"
     for fname in ("bench_results.json", scratch_c):
@@ -1187,7 +1188,8 @@ def main() -> None:
     # 1..N-1, so the current round is max(BENCH_r*)+1.  If that snapshot
     # already exists (a second run within the same round, e.g. the
     # driver's low-core scaling pass), suffix the core count instead of
-    # overwriting it (VERDICT r11 #7).
+    # overwriting it (VERDICT r11 #7), and a run index after that when a
+    # later run at the same core count finds that one taken too.
     rounds = []
     for p in os.listdir(here):
         m = re.fullmatch(r"BENCH_r(\d+)\.json", p)
@@ -1197,7 +1199,11 @@ def main() -> None:
         here, f"bench_results_r{(max(rounds) + 1 if rounds else 1):02d}.json"
     )
     if os.path.exists(snap):
-        snap = snap[:-len(".json")] + f"_c{cpus}.json"
+        base = snap[:-len(".json")] + f"_c{cpus}"
+        snap, run = f"{base}.json", 1
+        while os.path.exists(snap):
+            run += 1
+            snap = f"{base}_run{run}.json"
     with open(snap, "w") as f:
         f.write(json.dumps(result) + "\n")
     compact = {

@@ -25,7 +25,7 @@ from ..sources.cdc_schema import (
     parse_envelope_debezium,
     parse_envelope_maxwell,
 )
-from ..sources.tables import load_table, register_views
+from ..sources.tables import fan_out, load_table, register_views
 
 _ACTIONS = ("INSERT", "UPDATE-INSERT", "DELETE")
 
@@ -45,8 +45,10 @@ def cdc_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Action is derived from the key (okey % 3) so the synthesis is
     deterministic; DELETE payloads are blanked to the key column only.
+    The per-row JSON encode/decode dwarfs the scan, so a single-split
+    ``orders`` file is fanned out across the cores first.
     """
-    o = load_table(spark, sf_dir, "orders")
+    o = fan_out(load_table(spark, sf_dir, "orders"))
     action = F.element_at(
         F.array(*[F.lit(a) for a in _ACTIONS]),
         (F.col("o_orderkey") % 3 + 1).cast("int"),

@@ -30,7 +30,7 @@ def get_spark(
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
-        n = os.cpu_count() or 8
+        n = len(os.sched_getaffinity(0))
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else n
 
     builder = (

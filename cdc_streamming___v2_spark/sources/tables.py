@@ -1,7 +1,8 @@
 """Batch table loaders for the driver's parquet testdata.
 
 Scans are plain ``spark.read.parquet`` so Catalyst gets full predicate
-pushdown / column pruning / row-group skipping for free (SURVEY.md §4).
+pushdown / column pruning / row-group skipping for free (SURVEY.md §4);
+``load_table`` only adds a memo of each file's inferred schema.
 At cluster scale the same call reads a partitioned parquet/Delta layout;
 nothing here assumes local mode.
 """
@@ -12,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import TABLES
 
@@ -44,8 +46,63 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change the Spark schema inferred from the same parquet
+# footers (type mapping, name resolution, and the merged field set of a
+# directory).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (resolved path, conf values) -> (file identity, inferred schema). One entry
+# per path and conf setting: a rewritten file replaces its stale entry.
+_SCHEMA_MEMO: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """(relative name, inode, size, mtime_ns) of the file, or of every file
+    under the directory. Raises OSError when the path is not local."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            out.append((os.path.relpath(p, path), st.st_ino, st.st_size,
+                        st.st_mtime_ns))
+    return tuple(out)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(table_path(sf_dir, name))
+    """Scan one table. The parquet schema is inferred only on the first load
+    of an unchanged file under the current schema confs.
+
+    Inference runs a Spark job over the footers each time a frame is built;
+    later loads pass the memoized schema, which plans the same scan with no
+    job. A path the local filesystem cannot stat (object stores, HDFS) is
+    read as before.
+    """
+    path = table_path(sf_dir, name)
+    real = os.path.realpath(path)
+    try:
+        ident = _file_identity(real)
+    except OSError:
+        df = spark.read.parquet(path)
+    else:
+        key = (real, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+        hit = _SCHEMA_MEMO.get(key)
+        if hit is not None and hit[0] == ident:
+            df = spark.read.schema(hit[1]).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            _SCHEMA_MEMO[key] = (ident, df.schema)
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -1,12 +1,18 @@
-"""Round-trip + pushdown checks for the batch file-format surface."""
+"""Round-trip + pushdown checks for the batch file-format surface, and
+load_table's schema memo."""
 
 from __future__ import annotations
 
 import glob
 import os
+import uuid
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
 
 from cdc_streamming___v2_spark.sources import formats as FMT
 from cdc_streamming___v2_spark.sources.tables import load_table
@@ -111,3 +117,61 @@ def test_partition_pruning_via_join_static_and_dynamic(spark, tmp_path):
     p2 = q2._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruningexpression" in p2, p2[:2000]
     assert q2.count() > 0
+
+
+def _load_jobs(spark, sf_dir, name):
+    """load_table's frame plus the Spark job ids its build started."""
+    sc = spark.sparkContext
+    group = f"load_table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table build")
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(spark, path, layout, cols):
+    """Write ``cols`` as one parquet file or as a Spark-written directory."""
+    if layout == "file":
+        pq.write_table(pa.table(cols), path)
+    else:
+        spark.createDataFrame(pd.DataFrame(cols)).write.mode("overwrite").parquet(path)
+
+
+def test_load_table_reuses_schema_of_unchanged_file(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    _write(spark, path, "file", {"k": [1, 2, 3], "v": ["a", "b", "c"]})
+    first, first_jobs = _load_jobs(spark, str(tmp_path), "t")
+    assert first_jobs, "the first load infers the schema with a Spark job"
+    again, again_jobs = _load_jobs(spark, str(tmp_path), "t")
+    assert again_jobs == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_load_table_sees_rewritten_schema(spark, tmp_path, layout):
+    path = str(tmp_path / "t.parquet")
+    _write(spark, path, layout, {"k": [1, 2]})
+    assert load_table(spark, str(tmp_path), "t").columns == ["k"]
+    _write(spark, path, layout, {"k": [1, 2], "extra": [0.5, 1.5]})
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "extra"]
+    assert sorted(r.extra for r in df.collect()) == [0.5, 1.5]
+
+
+def test_load_table_follows_binary_as_string_conf(spark, tmp_path):
+    _write(spark, str(tmp_path / "t.parquet"), "file", {"b": [b"x", b"yz"]})
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        df = load_table(spark, str(tmp_path), "t")
+        assert isinstance(df.schema["b"].dataType, BinaryType)
+        spark.conf.set(key, "true")
+        df = load_table(spark, str(tmp_path), "t")
+        assert isinstance(df.schema["b"].dataType, StringType)
+        assert sorted(r.b for r in df.collect()) == ["x", "yz"]
+    finally:
+        spark.conf.set(key, before)

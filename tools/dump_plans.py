@@ -5,7 +5,9 @@ Plan SHAPE is host-load insensitive, so this can run any time — but note
 that building a query frame is not always free: operators that call
 localCheckpoint(eager=True) at DataFrame-construction time execute their
 full upstream Spark jobs (Arrow shingle kernels, Lloyd rounds, streaming
-lifecycle cycles) before the plan is dumped (ADVICE r11).
+lifecycle cycles) before the plan is dumped (ADVICE r11). Building also
+runs one parquet schema-inference job for each table this process has not
+loaded yet (sources.tables.load_table memoizes the schema after that).
 """
 
 from __future__ import annotations

@@ -6,7 +6,10 @@ a frame is NOT always execution-free: operators that call
 localCheckpoint(eager=True) at construction time run their upstream
 Spark jobs (Arrow shingle kernels, Lloyd rounds, streaming lifecycle
 cycles) before the plan exists — with no query names given this builds
-ALL queries and therefore executes every such job (ADVICE r11).
+ALL queries and therefore executes every such job (ADVICE r11). Building
+also runs one parquet schema-inference job for each table this process
+has not loaded yet (sources.tables.load_table memoizes the schema after
+that).
 
 Usage: python tools/plan_stats.py [query ...] [--min-lines=N]
 """
