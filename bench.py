@@ -1,14 +1,15 @@
-"""Headline benchmark: runs the engine's flagship queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line with per-query wall seconds.
+"""Headline benchmark: runs the full ``queries()`` registry, in name order,
+at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line with the headline total;
+the per-query wall seconds go to the round-stamped snapshot that line's
+``queries_path`` names.
 
 Each query executes as ``count()`` over the result (forces the full plan
 without driver-side collect of wide rows; limits/top-k still materialize).
 
-Iterative / collect-heavy queries (multi-job DAGs rooted at checkpoints)
-show up-to-7x single-run outliers from JVM compilation landing mid-query;
-those run 3x and report the median. Every other query runs once, cold —
-the headline total is the sum of recorded per-query seconds.
+Every query runs in two whole-registry passes; the outlier-prone ``SPIKY``
+set gets a third. A query's headline seconds are the min over its passes,
+and the headline total is the sum of those per-query mins.
 """
 
 from __future__ import annotations
@@ -23,423 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from cdc_streamming___v2_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "scd2_latest_state",
-    "scd2_as_of",
-    "scd2_join_as_of",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "top_customers",
-    "window_rank_lag",
-    "json_funcs",
-    "asof_join_purchase_view",
-    "range_join_error_clicks",
-    "cdc_envelope_roundtrip",
-    "cdc_merge_apply",
-    "skew_salted_join",
-    "multimodal_decode",
-    "dedup_exact",
-    "minhash_near_dup",
-    "simhash_fingerprint",
-    "cosine_topk",
-    "ann_lsh_topk",
-    "ann_ivf_kmeans_topk",
-    "ann_pq_topk",
-    "token_count",
-    "text_quality",
-    "q8_market_share",
-    "q9_product_profit",
-    "q21_waiting_suppliers",
-    "gopher_repetition",
-    "doc_chunks",
-    "decontaminate",
-    "dedup_clusters",
-    "embedding_quantize",
-    "gapfill_daily_value",
-    "pii_scrub",
-    "dup_spans",
-    "dataset_split",
-    "priority_sample",
-    "kmv_distinct",
-    "table_stats",
-    "countmin_freq",
-    "bloom_prefilter",
-    "quantile_sketch",
-    "hll_distinct",
-    "kmv_set_ops",
-    "pareto_frontier",
-    "peak_concurrency",
-    # behavior / event-window / corpus tiers (round-2 additions: every tier
-    # with a green oracle should have at least one bench sentinel so a perf
-    # regression there is mechanically visible)
-    "markov_transitions",
-    "market_basket",
-    "funnel_conversion",
-    "retention_cohorts",
-    "tumbling_window_agg",
-    "sliding_window_agg",
-    "session_agg",
-    "activity_streaks",
-    "embedding_near_dup",
-    "fuzzy_match_parts",
-    "ngram_jaccard_pairs",
-    "seq_packing",
-    "tfidf_top_terms",
-    "semantic_dedup",
-    "incremental_near_dup",
-    "random_projection",
-    "pagerank_nations",
-    "dedup_keepers",
-    "lm_bigram_quality",
-    "hll_merge_groups",
-    "data_quality_checks",
-    "ewma_user_value",
-    "jaccard_prefix_join",
-    "triangle_count",
-    "anomaly_days",
-    "rolling_distinct_users",
-    "equi_depth_histogram",
-    "interarrival_gaps",
-    "revenue_gini",
-    "doc_novelty",
-    # round-3 additions
-    "incremental_agg_maintain",
-    "zorder_layout",
-    "attribution_credit",
-    "trend_fit",
-    "mutual_information",
-    "winsorized_stats",
-    "bfs_hops",
-    "k_anonymity",
-    "seasonality_strength",
-    "cusum_changepoint",
-    "chi2_drift",
-    "scd2_snapshot_diff",
-    "sorted_neighborhood_pairs",
-    "session_path_analysis",
-    "silhouette_score",
-    "mmr_diverse_topk",
-    "blocking_quality",
-    "funnel_windowed",
-    # round-4 additions
-    "commitlog_changes",
-    "bpe_pair_counts",
-    "quality_logit_score",
-    "bm25_topk",
-    "mixture_weights",
-    "robust_mad_outliers",
-    "source_boilerplate",
-    "ks_drift",
-    "wow_growth",
-    "char_entropy",
-    "hybrid_rrf_topk",
-    "dsir_importance_weights",
-    "holt_forecast",
-    "acf_daily_revenue",
-    "benford_deviation",
-    "fellegi_sunter_linkage",
-    "asof_tolerance_join",
-    "quantile_normalize",
-    "correlation_matrix",
-    "degree_assortativity",
-    "pca_top_component",
-    "entity_resolution",
-    "kaplan_meier",
-    "ab_test_lift",
-    "feature_matrix_daily",
-    "target_encoding",
-    "bootstrap_mean_ci",
-    "theil_sen_trend",
-    "rolling_correlation",
-    "recursive_reachability",
-    "variant_props_stats",
-    "zipf_fit",
-    "vocab_overlap_sources",
-    "dup_size_profile",
-    "burstiness",
-    "rfm_segmentation",
-    "cohort_ltv",
-    # round-5 additions
-    "debezium_envelope_roundtrip",
-    "cdc_schema_drift_report",
-    "clustering_coefficient",
-    "adamic_adar_linkpred",
-    "lpa_communities",
-    "naive_bayes_lang",
-    "knn_label_predict",
-    "feature_hashing",
-    "chi2_feature_select",
-    "heavy_hitters_topfreq",
-    "word_pmi_pairs",
-    "tokenizer_vocab_coverage",
-    "bpe_merge_rounds",
-    "l_diversity",
-    "dp_noisy_counts",
-    "lttb_downsample",
-    "geo_grid_join",
-    "interval_overlap_join",
-    "welch_t_test",
-    "twap_user_value",
-    "inventory_clamped_balance",
-    "skew_diagnostics",
-    "ols_two_feature",
-    "incremental_join_maintain",
-    "bellman_ford_cheapest",
-    "weighted_median_price",
-    "golden_record",
-    # round-5 wave-3 additions (model-eval / graph / temporal / profiling)
-    "classifier_eval_langid",
-    "auc_roc_quality",
-    "calibration_bins",
-    "psi_drift",
-    "k_core_peel",
-    "interval_coalesce_islands",
-    "max_drawdown_user",
-    "stl_lite_decompose",
-    "hhi_concentration",
-    "fd_violations",
-    "containment_near_dup",
-    "nearest_centroid_classify",
-    "winnowing_pairs",
-    "spearman_daily",
-    "quality_ensemble_vote",
-    "compaction_bin_packing",
-    "event_run_lengths",
-    "fifo_payment_allocation",
-    "harmonic_centrality",
-    "maxwell_envelope_roundtrip",
-    "canal_envelope_roundtrip",
-    "decision_stump_train",
-    "readability_scores",
-    "asof_nearest_join",
-    "ranking_eval_bm25",
-    "bcubed_cluster_eval",
-    "anderson_darling_drift",
-    "rake_keywords",
-    "mann_whitney_u",
-    "kruskal_wallis",
-    "mann_kendall_trend",
-    "log_rank_test",
-    "t_closeness",
-    "js_divergence_sources",
-    "average_precision_quality",
-    "cohens_kappa_langid",
-    "mcnemar_quality_filters",
-    "isotonic_calibration",
-    "ohlc_bars",
-    "sax_symbols",
-    "seasonal_naive_mase",
-    "ams_f2_sketch",
-    "grid_dbscan_clusters",
-    "rapid_repeat_purchases",
-    "market_beta_types",
-    "srm_check",
-    "heaps_law_fit",
-    "nmi_cluster_label_eval",
-    "item_cf_topk",
-    "info_gain_features",
-    "retention_decay_fit",
-    "hurst_exponent",
-    "variance_changepoint",
-    "funnel_step_significance",
-    "absorption_conversion_prob",
-    "anova_f_oneway",
-    "levene_variance_test",
-    "wilson_rate_ci",
-    "term_burst_days",
-    "aws_dms_envelope_roundtrip",
-    "cramers_v_matrix",
-    "ipf_raking",
-    "wasserstein_pairs",
-    "hits_bipartite",
-    "simpson_reversal_detect",
-    "decile_gains_table",
-    "latency_sla_report",
-    "markov_next_event_accuracy",
-    "extreme_value_fit",
-    "price_elasticity_brand",
-    "abc_classification",
-    "nelson_aalen_hazard",
-    "exponential_gap_fit",
-    "did_estimate",
-    "iv_wald_estimate",
-    "rdd_estimate",
-    "psm_caliper_att",
-    "kfold_cv_rmse",
-    "conformal_interval_coverage",
-    "recsys_eval_cf",
-    "sequential_patterns",
-    "transition_entropy_rate",
-    "woe_iv_binning",
-    "control_chart_days",
-    "littles_law_audit",
-    "newsvendor_stock_level",
-    "psm_strata_ate",
-    "ransac_spend_fit",
-    "ab_power_analysis",
-    "page_hinkley_drift",
-    "community_modularity",
-    "neyman_allocation",
-    "bandit_replay_greedy",
-    "cdcgen_source_roundtrip",
-    "logistic_newton_fit",
-    "adaboost_stumps",
-    "cox_ph_fit",
-    "shapley_attribution",
-    "cuped_variance_reduction",
-    "qini_uplift_curve",
-    "sprt_replay",
-    "poisson_rate_model",
-    "jackknife_ci",
-    "james_stein_shrinkage",
-    "poisson_mixture_em",
-    "revenue_waterfall",
-    "boxplot_stats",
-    "weekday_seasonal_index",
-    "lorenz_deciles",
-    "theil_inequality",
-    "atkinson_index",
-    "price_volume_bridge",
-    "kendall_tau_pairs",
-    "xcorr_leadlag",
-    "bollinger_band_breaks",
-    "sma_crossover_days",
-    "cutler_rsi",
-    "ar2_forecast",
-    "granger_leadlag",
-    "ridge_two_feature",
-    "pacf_daily_revenue",
-    "negbin_overdispersion",
-    "durbin_watson_trend",
-    "minhash_estimator_calibration",
-    "eoq_reorder_policy",
-    "cagr_brand_revenue",
-    "textrank_keywords",
-    "permutation_test_lift",
-    "weibull_gap_fit",
-    "beta_fit_discount",
-    "price_index_fisher",
-    "theil_decomposition",
-    "energy_distance_pairs",
-    "cramer_von_mises_pairs",
-    "markov_removal_attribution",
-    "goldengate_envelope_roundtrip",
-    "stochastic_dominance_pairs",
-    "revenue_peaks",
-    "receivables_aging",
-    "cmh_pooled_odds",
-    "decayed_engagement_score",
-    "best_revenue_run",
-    "segment_migration_matrix",
-    "price_ending_profile",
-    "duplicate_payment_screen",
-    "split_purchase_screen",
-    "return_enrichment_by_brand",
-    "supply_risk_hhi",
-    "ship_lag_percentiles",
-    "repurchase_interval_profile",
-    "newey_west_trend_se",
-    "weekly_spectral_power",
-    # round 6
-    "sqlserver_cdc_roundtrip",
-    "chow_break_test",
-    "mahalanobis_outliers_2d",
-    "xyz_classification",
-    "bh_fdr_brand_lift",
-    "wilcoxon_signed_rank",
-    "friedman_test",
-    "dunn_posthoc_pairs",
-    "tukey_hsd_pairs",
-    "cochran_q_test",
-    "ljung_box_test",
-    "runs_test",
-    "grubbs_outlier_test",
-    "bass_diffusion_fit",
-    "ann_recall_at_k",
-    "jarque_bera_test",
-    "breusch_pagan_test",
-    "arch_lm_test",
-    "dickey_fuller_test",
-    "bartlett_test",
-    "mood_median_test",
-    "cliffs_delta_pairs",
-    "effect_size_pairs",
-    "partial_corr_daily",
-    "cronbach_alpha",
-    "brier_decomposition",
-    "hosmer_lemeshow",
-    "var_cvar_daily",
-    "sortino_sharpe_daily",
-    "chain_ladder_ultimates",
-    "theil_u2_forecast",
-    "pettitt_changepoint",
-    "mongo_changestream_roundtrip",
-    "dunning_g2_bigrams",
-    "yule_richness_sources",
-    "slope_one_predict",
-    "katz_centrality",
-    "hll_intersection_estimate",
-    "roll_spread_estimator",
-    "amihud_illiquidity",
-    "event_study_did",
-    "haar_energy_levels",
-    "spectral_entropy_weekly",
-    "fleiss_kappa_filters",
-    "wal2json_envelope_roundtrip",
-    "theta_method_forecast",
-    "croston_intermittent_demand",
-    "huber_irls_trend",
-    # round 7
-    "krippendorff_alpha",
-    "lin_ccc",
-    "bland_altman",
-    "icc_oneway",
-    "morans_i_acctbal",
-    "join_count_spatial",
-    "getis_ord_hotspots",
-    "holt_winters_forecast",
-    "dynamodb_stream_roundtrip",
-    "rmst_survival",
-    "competing_risks_cif",
-    "gesd_outliers",
-    "panel_fe_trend",
-    "tokenizer_fertility",
-    "quality_yield_curve",
-    "media_byte_histogram",
-    "ipw_ate",
-    "burrows_delta_sources",
-    "cdc_hot_keys",
-    "unseen_vocabulary_estimate",
-    "capture_recapture_estimate",
-    "ddsketch_quantiles",
-    "partition_skew_advisor",
-    "bitemporal_as_of",
-    "referential_integrity_audit",
-    "key_candidate_scan",
-    "debezium_flat_roundtrip",
-    "cooks_distance_screen",
-    "late_data_profile",
-    "seasonal_esd_anomalies",
-    "copula_dependence_daily",
-    "distance_correlation_daily",
-    "seasonal_mann_kendall",
-    "lorenz_asymmetry",
-    "xbar_r_chart",
-    "record_highs_test",
-]
-
-# r10 (VERDICT r9 #5): the registry queries previously OUTSIDE the
-# headline set — fundamentals, even-numbered TPC-H variants, and the CDC
-# lifecycle queries — join the bench so no registry query is invisible to
-# the per-round regression gate. HEADLINE_R9 preserves the 396-query set
-# every pre-r10 total was measured over; bench_results carries the total
-# over that subset too ("value_r9set") so round-over-round totals stay
-# comparable across the boundary.
-HEADLINE_R9 = list(HEADLINE)
 
 # CDC lifecycle tier (VERDICT r10 #5): these queries replay FIXED golden
 # corpora through real streaming restarts — their cost is stream-startup
@@ -460,87 +44,55 @@ LIFECYCLE = {
     "cdc_checkpoint_restart",
     "registry_hot_add_table",
 }
-HEADLINE += [
-    "agg_distinct",
-    "airbyte_record_roundtrip",
-    "ann_ivf_topk",
-    "array_agg_sorted",
-    "array_funcs",
-    "case_when_agg",
-    "cdc_conformance_matrix",
-    "central_tendency",
-    "cluster_balanced_sample",
-    "commitlog_change_feed",
-    "commitlog_compact_vacuum",
-    "streaming_watermark_execution",
-    "streaming_session_merge_execution",
-    "streaming_dedup_execution",
-    "cdc_checkpoint_restart",
-    "registry_hot_add_table",
-    # r11 additions
-    "schema_evolution_rename",
-    "streaming_interval_join_execution",
-    "cube_agg",
-    "date_funcs",
-    "dead_letter_replay",
-    "doc_fingerprint",
-    "domain_cap",
-    "except_all_bags",
-    "grouping_sets_agg",
-    "gumbel_block_maxima",
-    "hill_tail_index",
-    "inverted_index",
-    "join_anti",
-    "join_outer_coalesce",
-    "join_semi",
-    "lang_id",
-    "locf_fill",
-    "lognormal_fit_orders",
-    "map_funcs",
-    "math_funcs",
-    "minhash_signatures",
-    "null_handling",
-    "ordinal_concordance",
-    "pivot_agg",
-    "price_histogram",
-    "q11_important_parts",
-    "q12_late_shipments",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_join",
-    "q20_supply_threshold",
-    "q22_prospect_customers",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "regex_funcs",
-    "rollup_agg",
-    "schema_evolution_add_column",
-    "schema_evolution_column_drop",
-    "schema_evolution_widening",
-    "set_ops_customers",
-    "set_ops_except",
-    "simhash_hamming_pairs",
-    "sql_api_cte",
-    "stats_agg",
-    "stratified_sample",
-    "string_funcs",
-    "systematic_sample",
-    "time_range_moving_avg",
-    "time_rollup",
-    "transfer_entropy_daily",
-    "union_all_agg",
-    "unpivot_metrics",
-    "window_frame_funcs",
-    "window_ntile_dist",
-    "window_topk_per_group",
-    "word_freq_topn",
-]
 
+# Outlier-prone entries (iterative / candidate-explosion DAGs, where
+# cold-JIT lands mid-query with 3-9x spread) get a third timed pass.
+SPIKY = {
+    "dedup_clusters",
+    "minhash_near_dup",
+    "ann_lsh_topk",
+    "ann_ivf_kmeans_topk",  # Lloyd-iteration DAG: 3-9x cold-JIT outliers
+    "jaccard_prefix_join",  # candidate-explosion DAG, ~2x cold-JIT spread
+    # 6-table join pipelines: widest codegen in the suite, first runs
+    # pay 2x JIT (measured 3.4 -> 2.0 -> 1.9 -> 1.65s on idle hardware)
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q10_returned_items",
+    "dup_spans",  # observed one 5x outlier run under a host-load burst
+    # 6x in-bench outlier in r5 (1.2s both repeats vs 0.39-0.49s warm
+    # isolated x6) — cold-context spike, so give it a third repeat
+    "rolling_correlation",
+    # same pattern observed r5: 3.8s/2.4s in-bench vs ~0.95s isolated
+    # (4-table edge-list build / iterative Gram chain — wide codegen
+    # paying JIT + host-load bursts)
+    "degree_assortativity",
+    "pca_top_component",
+    # r06 contended-run breaches (judge-verified: zero code changes
+    # behind them; solo-idle min-of-6 re-measures all within noise).
+    # Raw solo lists show the cold-first-repeat pattern (first run
+    # 2-4x the warm floor), so give them the third repeat too.
+    "revenue_peaks",
+    "markov_removal_attribution",
+    "best_revenue_run",
+    "stochastic_dominance_pairs",
+    "ranking_eval_bm25",
+}
+
+# untimed JVM + file-metadata warm-up query
+WARMUP = "q1_pricing_summary"
+
+
+def _r9set() -> set[str] | None:
+    """The 396-query set every pre-r10 headline total was measured over
+    (the committed r09 snapshot's per-query keys), so ``value_r9set``
+    stays comparable across the r10 extension; None when absent."""
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "bench_results_r09.json"
+    )
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return set(json.load(f)["queries"])
 
 
 # --- host-noise canary protocol (VERDICT r8 #5) ---------------------------
@@ -952,10 +504,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
     qs = entrymod.queries()
-    run = [n for n in HEADLINE if n in qs]
+    # name order, so the bench order does not rotate with the gate's
+    run = sorted(qs)
 
     # warm the JVM + file metadata cache once (not timed)
-    qs["q1_pricing_summary"](spark, sf_dir).count()
+    qs[WARMUP](spark, sf_dir).count()
     # ...and the Python worker pool: the first Arrow/Python stage in a
     # session pays interpreter spawn (~1.5s, measured), which is process
     # startup, not engine throughput — r2's multimodal_decode "drift" was
@@ -983,39 +536,7 @@ def main() -> None:
     # load we can't see (observed: loadavg 4 with zero processes of ours
     # running, inflating single cold runs 2-4x run-to-run), so min over
     # repeats estimates the ENGINE's cost rather than the neighbors'.
-    # Outlier-prone entries (iterative / candidate-explosion DAGs, where
-    # cold-JIT lands mid-query with 3-9x spread) get a third repeat.
-    spiky = {
-        "dedup_clusters",
-        "minhash_near_dup",
-        "ann_lsh_topk",
-        "ann_ivf_kmeans_topk",  # Lloyd-iteration DAG: 3-9x cold-JIT outliers
-        "jaccard_prefix_join",  # candidate-explosion DAG, ~2x cold-JIT spread
-        # 6-table join pipelines: widest codegen in the suite, first runs
-        # pay 2x JIT (measured 3.4 -> 2.0 -> 1.9 -> 1.65s on idle hardware)
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
-        "q10_returned_items",
-        "dup_spans",  # observed one 5x outlier run under a host-load burst
-        # 6x in-bench outlier in r5 (1.2s both repeats vs 0.39-0.49s warm
-        # isolated x6) — cold-context spike, so give it a third repeat
-        "rolling_correlation",
-        # same pattern observed r5: 3.8s/2.4s in-bench vs ~0.95s isolated
-        # (4-table edge-list build / iterative Gram chain — wide codegen
-        # paying JIT + host-load bursts)
-        "degree_assortativity",
-        "pca_top_component",
-        # r06 contended-run breaches (judge-verified: zero code changes
-        # behind them; solo-idle min-of-6 re-measures all within noise).
-        # Raw solo lists show the cold-first-repeat pattern (first run
-        # 2-4x the warm floor), so give them the third repeat too.
-        "revenue_peaks",
-        "markov_removal_attribution",
-        "best_revenue_run",
-        "stochastic_dominance_pairs",
-        "ranking_eval_bm25",
-    }
-
+    # SPIKY entries get a third repeat.
     # Repeats run as whole-list PASSES, not back-to-back (round-8): the
     # host's invisible-neighbor bursts last minutes and cover a CONTIGUOUS
     # block of queries, so back-to-back repeats of a query land inside the
@@ -1025,7 +546,7 @@ def main() -> None:
     # Separating a query's repeats by a full pass (~minutes) decorrelates
     # them from any burst shorter than a pass, at identical total cost.
     # Repeat counts are unchanged: 2 per query, +1 third pass for the
-    # spiky set.  Headline stat stays min (SURVEY §10 r3); raw lists
+    # SPIKY set.  Headline stat stays min (SURVEY §10 r3); raw lists
     # recorded so min AND median are auditable (ADVICE r3).
     # Mid-bench canary probes every MID_PROBE_EVERY timed runs
     # (VERDICT r10 #2): the pre/post brackets never sample DURING the
@@ -1041,7 +562,7 @@ def main() -> None:
     cpu_last = _cpu_sample()
     for pass_no in range(3):
         for name in run:
-            if pass_no == 2 and name not in spiky:
+            if pass_no == 2 and name not in SPIKY:
                 continue
             if (
                 pins
@@ -1105,6 +626,7 @@ def main() -> None:
     host_x = (
         round(sum(probe_xs) / len(probe_xs), 3) if probe_xs else None
     )
+    r9set = _r9set()
     result = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -1114,9 +636,9 @@ def main() -> None:
         "host_x_pin_mean": host_x,
         # total over the pre-r10 396-query headline set, for
         # round-over-round comparability across the r10 extension
-        "value_r9set": round(
-            sum(v for n, v in per_query.items() if n in set(HEADLINE_R9)),
-            3,
+        "value_r9set": (
+            round(sum(v for n, v in per_query.items() if n in r9set), 3)
+            if r9set is not None else None
         ),
         "value_median": total_median,
         # headline composition (VERDICT r10 #5): lifecycle = fixed-corpus
@@ -1167,29 +689,21 @@ def main() -> None:
     # flushed FINAL stdout line is a compact summary that always fits
     # (VERDICT r3 #2).
     here = os.path.dirname(os.path.abspath(__file__))
-    # r12 (VERDICT r11 #7): the driver benches the SAME round at two core
-    # counts and the second run overwrote bench_results.json before the
-    # per-query comparator read it (PERF_r11 came back with n_common=0).
-    # The per-query record now ALSO lands at a core-count-distinct path,
-    # and queries_path points THERE; bench_results.json is still written
-    # for back-compat with older tooling.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if not cpus.isdigit():  # unset or "*": the cores this process may use
         cpus = str(len(os.sched_getaffinity(0)))
     result["cpus"] = int(cpus)
-    scratch_c = f"bench_results_c{cpus}.json"
-    for fname in ("bench_results.json", scratch_c):
-        with open(os.path.join(here, fname), "w") as f:
-            f.write(json.dumps(result) + "\n")
-    # VERDICT r6 #5: bench_results.json is scratch (gitignored) and was
-    # overwritten each round, making round-over-round per-query
-    # comparison impossible.  Also write a round-stamped snapshot that
-    # gets committed: at bench time the driver has recorded rounds
-    # 1..N-1, so the current round is max(BENCH_r*)+1.  If that snapshot
-    # already exists (a second run within the same round, e.g. the
-    # driver's low-core scaling pass), suffix the core count instead of
-    # overwriting it (VERDICT r11 #7), and a run index after that when a
-    # later run at the same core count finds that one taken too.
+    # VERDICT r6 #5: bench_results.json is scratch (gitignored) and is
+    # overwritten each run, so the per-query record also lands in a
+    # round-stamped snapshot that is never overwritten: at bench time the
+    # driver has recorded rounds 1..N-1, so the current round is
+    # max(BENCH_r*)+1.  If that snapshot already exists (a second run
+    # within the same round, e.g. the driver's low-core scaling pass),
+    # suffix the core count (VERDICT r11 #7), and a run index after that
+    # when a later run at the same core count finds that one taken too.
+    # The compact line's queries_path names this snapshot (VERDICT r12
+    # #1): a second same-round run cannot clobber it before the
+    # per-query comparator reads it.
     rounds = []
     for p in os.listdir(here):
         m = re.fullmatch(r"BENCH_r(\d+)\.json", p)
@@ -1200,12 +714,13 @@ def main() -> None:
     )
     if os.path.exists(snap):
         base = snap[:-len(".json")] + f"_c{cpus}"
-        snap, run = f"{base}.json", 1
+        snap, k = f"{base}.json", 1
         while os.path.exists(snap):
-            run += 1
-            snap = f"{base}_run{run}.json"
-    with open(snap, "w") as f:
-        f.write(json.dumps(result) + "\n")
+            k += 1
+            snap = f"{base}_run{k}.json"
+    for path in (os.path.join(here, "bench_results.json"), snap):
+        with open(path, "w") as f:
+            f.write(json.dumps(result) + "\n")
     compact = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -1216,10 +731,7 @@ def main() -> None:
         "canary_verdict": overall_canary,
         "value_drift_normalized": result["value_drift_normalized"],
         "cpus": result["cpus"],
-        # core-count-distinct per-query record (VERDICT r11 #7: a second
-        # same-round run at another core count no longer clobbers the
-        # first's per-query data before the comparator reads it)
-        "queries_path": scratch_c,
+        "queries_path": os.path.basename(snap),
     }
     print(json.dumps(compact), flush=True)
 

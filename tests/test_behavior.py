@@ -81,27 +81,52 @@ def test_registry_rejects_duplicate_keys():
         entry._merge_registries([base, stray])
 
 
-def test_registry_gate_order_and_floor():
-    """Registration order IS the driver's evaluation order: the never-
-    driver-checked queries (VERDICT r2 #1) must lead, the registry must
-    not silently shrink, and every query keeps an oracle twin."""
+def test_registry_gate_order_and_floor(tmp_path):
+    """Registration order IS the driver's evaluation order, derived from
+    the committed CORRECTNESS_r*.json proofs: never-proven queries lead,
+    then the oldest proofs, and the just-proven window goes to the back.
+    The registry must not silently shrink, and every query keeps an
+    oracle twin."""
+    import json
+    import os
+
     import __spark_entry__ as entry
 
     q, o = entry._registry()
     names = list(q)
-    assert names[: len(entry._GATE_PRIORITY)] == list(entry._GATE_PRIORITY)
     # _MIN_QUERIES is the EXACT registry size (VERDICT r3: a lagging floor
     # could mask a module silently losing one query) — any add/remove must
     # bump the constant in lockstep
     assert len(names) == entry._MIN_QUERIES
     assert set(o) == set(names)  # zero rows-only checks
 
-    # hard failure (not silent shrink) when a priority name disappears
-    import pytest
+    # the policy on a synthetic registry (module order a..f)
+    reg = dict.fromkeys(["a", "b", "c", "d", "e", "f"])
+    proofs = {"a": 12, "b": 3, "d": 1, "e": 3, "gone": 1}
+    order = entry._gate_order(reg, proofs)
+    assert order[:2] == ["c", "f"]  # never proven lead, in module order
+    assert order[2] == "d"  # then the oldest proof
+    assert order[3:5] == ["b", "e"]  # a tie keeps module order
+    assert order[-1] == "a"  # the just-proven go to the back
+    assert "gone" not in order  # a proof of an unknown query is ignored
+    assert entry._gate_order(reg, {}) == list(reg)
 
-    trimmed = {k: v for k, v in q.items() if k != entry._GATE_PRIORITY[0]}
-    with pytest.raises(ValueError, match="unknown queries"):
-        entry._gate_order(trimmed)
+    # a failed record is not a proof
+    def rec(ok=True, err=None):
+        return {"rows_match": ok, "schema_match": ok, "err": err}
+
+    assert entry._load_proofs(str(tmp_path)) == {}
+    for rnd, records in (
+        (1, {"a": rec(), "b": rec(), "c": rec(ok=None, err="boom")}),
+        (2, {"a": rec(), "b": rec(ok=False)}),
+    ):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(records))
+    assert entry._load_proofs(str(tmp_path)) == {"a": 2, "b": 1}
+
+    # on the real artifacts, the next window is not the last one again
+    with open(os.path.join(entry._HERE, "CORRECTNESS_r12.json")) as f:
+        last_window = set(json.load(f))
+    assert not set(names[:50]) & last_window
 
 
 def test_triangle_membership_consistency(spark):

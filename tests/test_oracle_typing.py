@@ -154,11 +154,9 @@ def test_pandas_hash_null_timestamp_nat(con):
 
 def test_baseline_current_pin_table_covers_headline():
     """BASELINE.md's 'Current pins' table is the single operative
-    regression reference (VERDICT r7 #7): it must cover EXACTLY bench.py's
-    headline query set, one row each, with a parseable positive pin."""
+    regression reference (VERDICT r7 #7): it must cover EXACTLY the
+    registry bench.py runs, one row each, with a parseable positive pin."""
     import re
-
-    import bench
 
     baseline = os.path.join(os.path.dirname(__file__), "..", "BASELINE.md")
     text = open(baseline).read()
@@ -168,8 +166,29 @@ def test_baseline_current_pin_table_covers_headline():
     )
     names = [n for n, _ in rows]
     assert len(names) == len(set(names)), "duplicate pin rows"
-    assert set(names) == set(bench.HEADLINE)
+    assert set(names) == set(entrymod.queries())
     assert all(float(v) > 0 for _, v in rows)
+
+
+def test_policy_name_sets_are_registry_queries():
+    """The hand-kept policy subsets must name registry queries: a
+    misspelled name would otherwise be silently skipped (and shrink, e.g.,
+    bench.py's ``value_lifecycle``) instead of failing."""
+    import bench
+    from perfbench.bench import SLICE
+    from tools import scale_evidence
+
+    registry = set(entrymod.queries())
+    named = {
+        "LIFECYCLE": set(bench.LIFECYCLE),
+        "SPIKY": set(bench.SPIKY),
+        "CANARIES": set(bench.CANARIES),
+        "bench.WARMUP": {bench.WARMUP},
+        "scale_evidence.WARMUP": {scale_evidence.WARMUP},
+        "perfbench SLICE": set(SLICE),
+    }
+    for label, names in named.items():
+        assert names <= registry, f"{label}: {sorted(names - registry)}"
 
 
 def test_bench_canary_pins_and_verdict_logic():

@@ -1,6 +1,7 @@
-"""Scale-up evidence run (VERDICT r3 #6): synthesize a 10x corpus
-(documents + embeddings) from sf0.1 and measure the dedup/ANN tier at both
-scales, asserting ~linear growth for the banded/blocked operators.
+"""Scale-up evidence run (VERDICT r3 #6): synthesize a 10x corpus from
+sf0.1 and measure every ``queries()`` registry query at both scales, one
+``bench_sf1.json`` row each, so ~linear growth of the banded/blocked,
+join and window operators shows as a ratio near 10 or below.
 
 Corpus construction keeps the workload SHAPE honest at 10x:
 
@@ -28,10 +29,33 @@ Corpus construction keeps the workload SHAPE honest at 10x:
   realistic shape (facts grow faster than dims), and each dim row simply
   matches 10x more fact rows.
 
-region/nation/customer/supplier/part/events are symlinked from sf0.1.
+- events: 10 replicas with user ids offset per replica (every per-user
+  window stays within its replica, so linear growth is the correct
+  expectation) and event ids offset by an even constant.
 
-Usage: python tools/scale_evidence.py  [--rebuild]
-Writes bench_sf1.json at the repo root; bench.py folds it into
+region/nation/customer/supplier/part are symlinked from sf0.1.
+
+Expected ratios by class of query:
+
+- corpus-bound queries (documents/embeddings) rest their 100-TB claims on
+  banding, blocking or prefix filtering; candidates grow linearly with the
+  shingle-disjoint shards above.
+- fact-bound and event-bound queries read 10x orders/lineitem/events;
+  many reduce to a calendar-, vocabulary- or dimension-bounded frame (a
+  daily frame, a (type x day) grid, the customer panel) before any window
+  or join, so only that first scan and reduce grows and the expected
+  ratio is at most ~10.
+- queries that read ONLY dimension tables, and the CDC lifecycle queries
+  that replay fixed golden or conformance corpora (the same literal
+  envelope lines at every SF), are fixed-size by construction: their
+  expected ratio is ~1.0, and that is the honest reading, not a
+  measurement artifact.  The lifecycle queries' ingest throughput is
+  benched by ``bench.py``'s cdc_ingest instead.
+
+Usage: python tools/scale_evidence.py [--rebuild] [--only=q1,q2]
+       python tools/scale_evidence.py --replicas=N --probe=q1,q2 [--rebuild]
+Writes bench_sf1.json at the repo root (``--only`` refreshes just those
+rows; ``--probe`` adds a probe_{N}x section); bench.py folds it into
 bench_results.json as the "bench_sf1" section when present.
 """
 
@@ -50,578 +74,8 @@ SRC = "/root/testdata/sf0.1"
 SCALE_DIR = os.path.join(ROOT, ".scale", "sf1x10")
 REPLICAS = 10
 
-# the corpus-bound tier (documents/embeddings only) — the queries whose
-# 100-TB claims rest on banding/blocking/prefix-filtering
-QUERIES = [
-    "minhash_signatures",
-    "minhash_near_dup",
-    "incremental_near_dup",
-    "dedup_clusters",
-    "dedup_keepers",
-    "ngram_jaccard_pairs",
-    "jaccard_prefix_join",
-    "simhash_fingerprint",
-    "embedding_near_dup",
-    "semantic_dedup",
-    "ann_lsh_topk",
-    "ann_ivf_kmeans_topk",
-    "ann_pq_topk",
-    "mmr_diverse_topk",
-    "tfidf_top_terms",
-    "dedup_exact",
-    # round-5 wave-3/4 corpus-bound additions
-    "containment_near_dup",
-    "winnowing_pairs",
-    "quality_ensemble_vote",
-    "classifier_eval_langid",
-    "auc_roc_quality",
-    "nearest_centroid_classify",
-    "compaction_bin_packing",
-    "readability_scores",
-    "decision_stump_train",
-    # restarted-session corpus-bound additions
-    "js_divergence_sources",
-    "heaps_law_fit",
-    "info_gain_features",
-    "average_precision_quality",
-    "isotonic_calibration",
-    "grid_dbscan_clusters",
-    "nmi_cluster_label_eval",
-    # fifth-session corpus-bound additions
-    "minhash_estimator_calibration",
-    "textrank_keywords",
-    # round 6: the ANN tier's own measurement op (brute force + LSH both)
-    "ann_recall_at_k",
-    # round-6 session-2 corpus-bound additions (score-grid folds, bigram
-    # transforms, frequency spectra — all vocabulary/grid-bounded after
-    # one corpus reduce)
-    "brier_decomposition",
-    "hosmer_lemeshow",
-    "dunning_g2_bigrams",
-    "yule_richness_sources",
-    # round-8 (VERDICT r6 #8): bcubed reduces the recomputed
-    # dedup_clusters output to (cluster, class) contingency cells over
-    # the 10x shingle-disjoint corpus — cost dominated by the upstream
-    # banded clustering, which is the proven-linear family above
-    "bcubed_cluster_eval",
-]
-
-# the event-log tier (round-5 wave 3): per-user ordered-window operators
-# against 10x events (user ids offset per replica, so every user window
-# stays within its replica -> linear growth is the correct expectation)
-EVENT_QUERIES = [
-    "interval_coalesce_islands",
-    "max_drawdown_user",
-    "psi_drift",
-    "event_run_lengths",
-    "asof_nearest_join",
-    "fifo_payment_allocation",
-    # restarted-session event-bound additions (cent-grid ranks, day-frame
-    # folds, user-keyed pair joins, state-frame iteration)
-    "mann_whitney_u",
-    "kruskal_wallis",
-    "log_rank_test",
-    "ohlc_bars",
-    "ams_f2_sketch",
-    "rapid_repeat_purchases",
-    "absorption_conversion_prob",
-    # third-session event-bound additions (cell aggregations, bounded-grid
-    # order statistics, day-frame sequential folds)
-    "did_estimate",
-    "iv_wald_estimate",
-    "conformal_interval_coverage",
-    "sequential_patterns",
-    "transition_entropy_rate",
-    "woe_iv_binning",
-    "control_chart_days",
-    "page_hinkley_drift",
-    "ab_power_analysis",
-    "bandit_replay_greedy",
-    "logistic_newton_fit",
-    "adaboost_stumps",
-    "cox_ph_fit",
-    "shapley_attribution",
-    "james_stein_shrinkage",
-    # round-6 event-bound additions (pooled cent-grid ranks, 7-row week
-    # blocks)
-    "friedman_test",
-    "dunn_posthoc_pairs",
-    "tukey_hsd_pairs",
-    "cochran_q_test",
-    "revenue_waterfall",
-    "cuped_variance_reduction",
-    "qini_uplift_curve",
-    "sprt_replay",
-    "poisson_rate_model",
-    "jackknife_ci",
-    "poisson_mixture_em",
-    "boxplot_stats",
-    "weekday_seasonal_index",
-    # fifth-session event-bound additions (events grow 10x; the
-    # (type x day) grids they reduce to stay calendar x vocab bounded)
-    "kendall_tau_pairs",
-    "xcorr_leadlag",
-    "granger_leadlag",
-    "pacf_daily_revenue",
-    "negbin_overdispersion",
-    "permutation_test_lift",
-    "weibull_gap_fit",
-    "energy_distance_pairs",
-    "cramer_von_mises_pairs",
-    "markov_removal_attribution",
-    "stochastic_dominance_pairs",
-    "cmh_pooled_odds",
-    "decayed_engagement_score",
-    # round-6 session-2 event-bound additions (k-row type frame or the
-    # bounded cent-value grid after one events reduce)
-    "bartlett_test",
-    "mood_median_test",
-    "cliffs_delta_pairs",
-    "effect_size_pairs",
-    "hll_intersection_estimate",
-    "latency_sla_report",
-    # round-8 breadth batch 3
-    "fuzzy_match_parts",
-    "random_projection",
-    "holt_forecast",
-    "cosine_topk",
-    "bpe_pair_counts",
-    "top_customers",
-    "q10_returned_items",
-    "nelson_aalen_hazard",
-    "attribution_credit",
-    "ipw_ate",
-    "knn_label_predict",
-    "variance_changepoint",
-    "cohort_ltv",
-    "sorted_neighborhood_pairs",
-    "incremental_join_maintain",
-    "calibration_bins",
-    "zipf_fit",
-    "decile_gains_table",
-    "interarrival_gaps",
-    "seq_packing",
-    "kmv_distinct",
-    "scd2_join_as_of",
-    "anova_f_oneway",
-    "markov_transitions",
-    "multimodal_decode",
-    "cdc_merge_apply",
-    "skew_diagnostics",
-    "recursive_reachability",
-    "fd_violations",
-    "pareto_frontier",
-    "zorder_layout",
-    "funnel_conversion",
-    "activity_streaks",
-    "silhouette_score",
-    "interval_overlap_join",
-    "anderson_darling_drift",
-    "clustering_coefficient",
-    "price_elasticity_brand",
-    "scd2_latest_state",
-    "robust_mad_outliers",
-]
-
-# corpus-bound wave-BB addition
-QUERIES.append("fleiss_kappa_filters")
-
-# the relational tier (VERDICT r4 #10): the 5 most expensive TPC-H-shape
-# queries, timed against 10x lineitem/orders to prove the join/agg plans
-# hold, not just the LLM tier
-RELATIONAL_QUERIES = [
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "q21_waiting_suppliers",
-    # restarted-session fact-bound additions
-    "item_cf_topk",
-    "t_closeness",
-    # third-session fact-bound additions (orders/lineitem grow 10x; the
-    # customer dim stays fixed, so the per-customer spend reduce is the
-    # fact-bound stage)
-    "kfold_cv_rmse",
-    "recsys_eval_cf",
-    "littles_law_audit",
-    "newsvendor_stock_level",
-    "rdd_estimate",
-    "psm_caliper_att",
-    "psm_strata_ate",
-    "ransac_spend_fit",
-    "community_modularity",
-    "neyman_allocation",
-    # fourth/fifth-session fact-bound additions (orders/lineitem grow 10x;
-    # the daily/decile/bucket frames they reduce to stay calendar-bounded)
-    "lorenz_deciles",
-    "theil_inequality",
-    "atkinson_index",
-    "price_volume_bridge",
-    "ridge_two_feature",
-    "bollinger_band_breaks",
-    "sma_crossover_days",
-    "cutler_rsi",
-    "ar2_forecast",
-    "durbin_watson_trend",
-    "eoq_reorder_policy",
-    "cagr_brand_revenue",
-    "beta_fit_discount",
-    "price_index_fisher",
-    "theil_decomposition",
-    "revenue_peaks",
-    "receivables_aging",
-    "best_revenue_run",
-    "segment_migration_matrix",
-    "price_ending_profile",
-    "duplicate_payment_screen",
-    "split_purchase_screen",
-    "return_enrichment_by_brand",
-    "supply_risk_hhi",
-    "ship_lag_percentiles",
-    "repurchase_interval_profile",
-    "newey_west_trend_se",
-    "weekly_spectral_power",
-    # round-6 fact-bound additions (orders/lineitem grow 10x; chow /
-    # wilcoxon reduce to the calendar-bounded daily frame, mahalanobis to
-    # the fixed customer dim, xyz/bh_fdr to brand-keyed bounded frames)
-    "sqlserver_cdc_roundtrip",
-    "chow_break_test",
-    "mahalanobis_outliers_2d",
-    "xyz_classification",
-    "bh_fdr_brand_lift",
-    "wilcoxon_signed_rank",
-    "ljung_box_test",
-    "runs_test",
-    # round-6 session-2 fact-bound additions (orders/lineitem grow 10x;
-    # every one reduces to the calendar-bounded daily frame, the k-row
-    # type frame, the (cohort x age) triangle, or the 25-brand rating
-    # matrix before any window/join)
-    "jarque_bera_test",
-    "breusch_pagan_test",
-    "arch_lm_test",
-    "dickey_fuller_test",
-    "partial_corr_daily",
-    "cronbach_alpha",
-    "var_cvar_daily",
-    "sortino_sharpe_daily",
-    "chain_ladder_ultimates",
-    "theil_u2_forecast",
-    "pettitt_changepoint",
-    "mongo_changestream_roundtrip",
-    "slope_one_predict",
-    "katz_centrality",
-    "roll_spread_estimator",
-    "amihud_illiquidity",
-    "event_study_did",
-    "haar_energy_levels",
-    "spectral_entropy_weekly",
-    "wal2json_envelope_roundtrip",
-    "grubbs_outlier_test",
-    "bass_diffusion_fit",
-    # wave BC (theta/huber reduce to the calendar-bounded daily frame;
-    # croston to the sampled part x demand-day frame, chains bounded by
-    # per-part order counts)
-    "theta_method_forecast",
-    "croston_intermittent_demand",
-    "huber_irls_trend",
-    # round-7 additions: lin_ccc/bland_altman join 10x orders to 10x
-    # lineitem on the replica-local orderkey; icc/holt-winters/gesd/
-    # panel-fe reduce orders to the customer panel, 60-month grid, daily
-    # frame, or per-customer moments; the dynamodb roundtrip maps 10x
-    # envelope lines; krippendorff/fertility/yield-curve scan the 10x
-    # suffix-sharded document corpus with bounded fold frames
-    "lin_ccc",
-    "bland_altman",
-    "icc_oneway",
-    "holt_winters_forecast",
-    "dynamodb_stream_roundtrip",
-    "gesd_outliers",
-    "panel_fe_trend",
-    "krippendorff_alpha",
-    "tokenizer_fertility",
-    "quality_yield_curve",
-    # round-7 session-2: burrows scans the 10x suffix-sharded corpus with
-    # a (sources x 30)-bounded panel; media histogram is one Arrow pass;
-    # hot-keys/capture/ddsketch/skew reduce 10x facts to bounded frames;
-    # unseen-vocab shuffles the token stream once on (lang, word)
-    "media_byte_histogram",
-    "burrows_delta_sources",
-    "cdc_hot_keys",
-    "unseen_vocabulary_estimate",
-    "capture_recapture_estimate",
-    "ddsketch_quantiles",
-    "partition_skew_advisor",
-    "referential_integrity_audit",
-    "key_candidate_scan",
-    "debezium_flat_roundtrip",
-    "cooks_distance_screen",
-    "seasonal_esd_anomalies",
-    "copula_dependence_daily",
-    "distance_correlation_daily",
-    "seasonal_mann_kendall",
-    "lorenz_asymmetry",
-    "xbar_r_chart",
-    "record_highs_test",
-    # round-8 (VERDICT r6 #8): hits_bipartite builds its part<->customer
-    # edge projection from 10x lineitem joined to 10x orders on the
-    # replica-local orderkey (edges grow exactly 10x, linear); each HITS
-    # round is two edge-keyed aggregates + a scalar-broadcast
-    # max-normalization
-    "hits_bipartite",
-]
-
-
-
-# Round-8 breadth batch (registry frozen; evidence coverage extended to
-# the heaviest not-yet-covered fact-bound queries, ranked by r07 bench
-# wall time).  All read replicated facts (orders/lineitem/events/
-# documents/embeddings); replica-local keys keep joins linear as above.
-COVERAGE_QUERIES = [
-    # round-8 registry addition: fixed-size conformance contract (60
-    # literal envelope lines at every SF) — expected ratio ~1.0 by
-    # construction; the per-dialect throughput paths are the roundtrips
-    "cdc_conformance_matrix",
-    # round-9 registry addition: dead-letter replay lifecycle over the
-    # fixed 73-line conformance corpus — same fixed-size-by-construction
-    # expectation (ratio ~1.0); replay throughput is live ingest's own
-    # narrow parse/route plan, benched by cdc_ingest
-    "dead_letter_replay",
-    # round-10 registry additions: the three evolution lifecycles replay
-    # fixed golden corpora (ratio ~1.0 by construction); the two
-    # commit-log queries derive from orders and scale with the facts
-    "schema_evolution_add_column",
-    "schema_evolution_widening",
-    "schema_evolution_column_drop",
-    "commitlog_change_feed",
-    "commitlog_compact_vacuum",
-    "streaming_watermark_execution",
-    "streaming_session_merge_execution",
-    "streaming_dedup_execution",
-    "cdc_checkpoint_restart",
-    "registry_hot_add_table",
-    "bpe_merge_rounds",
-    "debezium_envelope_roundtrip",
-    "entity_resolution",
-    "lpa_communities",
-    "market_basket",
-    "peak_concurrency",
-    "aws_dms_envelope_roundtrip",
-    "rake_keywords",
-    "bootstrap_mean_ci",
-    "cramers_v_matrix",
-    "bellman_ford_cheapest",
-    "ipf_raking",
-    "skew_salted_join",
-    "harmonic_centrality",
-    "maxwell_envelope_roundtrip",
-    "commitlog_changes",
-    "k_core_peel",
-    "char_entropy",
-    "cdc_envelope_roundtrip",
-    "dup_spans",
-    "source_boilerplate",
-    "goldengate_envelope_roundtrip",
-    "adamic_adar_linkpred",
-    "hybrid_rrf_topk",
-    "naive_bayes_lang",
-    "doc_novelty",
-    "wasserstein_pairs",
-    "word_pmi_pairs",
-    "cdc_schema_drift_report",
-    "hurst_exponent",
-    "canal_envelope_roundtrip",
-    "dsir_importance_weights",
-    "bloom_prefilter",
-    "triangle_count",
-    "ranking_eval_bm25",
-    "lm_bigram_quality",
-    # round-8 breadth batch 2 (next 40 by r07 bench wall time)
-    "cdcgen_source_roundtrip",
-    "pagerank_nations",
-    "rfm_segmentation",
-    "countmin_freq",
-    "vocab_overlap_sources",
-    "decontaminate",
-    "term_burst_days",
-    "cohens_kappa_langid",
-    "simpson_reversal_detect",
-    "chi2_feature_select",
-    "winsorized_stats",
-    "bm25_topk",
-    "pca_top_component",
-    "retention_decay_fit",
-    "table_stats",
-    "join_count_spatial",
-    "competing_risks_cif",
-    "abc_classification",
-    "degree_assortativity",
-    "rolling_distinct_users",
-    "lttb_downsample",
-    "equi_depth_histogram",
-    "hhi_concentration",
-    "rmst_survival",
-    "exponential_gap_fit",
-    "blocking_quality",
-    "fellegi_sunter_linkage",
-    "weighted_median_price",
-    "funnel_step_significance",
-    "data_quality_checks",
-    "session_path_analysis",
-    "levene_variance_test",
-    "kaplan_meier",
-    "quantile_sketch",
-    "getis_ord_hotspots",
-    "morans_i_acctbal",
-    "heavy_hitters_topfreq",
-    "bfs_hops",
-    "revenue_gini",
-    "geo_grid_join",
-    # round-8 breadth batch 4 (remaining benched queries)
-    "theil_sen_trend",
-    "sax_symbols",
-    "tokenizer_vocab_coverage",
-    "welch_t_test",
-    "retention_cohorts",
-    "feature_hashing",
-    "stl_lite_decompose",
-    "incremental_agg_maintain",
-    "session_agg",
-    "market_beta_types",
-    "cusum_changepoint",
-    "twap_user_value",
-    "mutual_information",
-    "acf_daily_revenue",
-    "target_encoding",
-    "scd2_snapshot_diff",
-    "priority_sample",
-    "mann_kendall_trend",
-    "chi2_drift",
-    "golden_record",
-    "hll_merge_groups",
-    "kmv_set_ops",
-    "seasonal_naive_mase",
-    "seasonality_strength",
-    "range_join_error_clicks",
-    "benford_deviation",
-    "ab_test_lift",
-    "scd2_as_of",
-    "ks_drift",
-    "markov_next_event_accuracy",
-    "hll_distinct",
-    "wilson_rate_ci",
-    "q1_pricing_summary",
-    "gapfill_daily_value",
-    "late_data_profile",
-    "quantile_normalize",
-    "gopher_repetition",
-    "bitemporal_as_of",
-    "dup_size_profile",
-    "asof_join_purchase_view",
-    "inventory_clamped_balance",
-    "anomaly_days",
-    "tumbling_window_agg",
-    "ols_two_feature",
-    "q6_forecast_revenue",
-    "doc_chunks",
-    "correlation_matrix",
-    "sliding_window_agg",
-    "feature_matrix_daily",
-    "spearman_daily",
-    "ewma_user_value",
-    "l_diversity",
-    "asof_tolerance_join",
-    "wow_growth",
-    "trend_fit",
-    "json_funcs",
-    "mcnemar_quality_filters",
-    "dp_noisy_counts",
-    "k_anonymity",
-    "funnel_windowed",
-    "mixture_weights",
-    "rolling_correlation",
-    "extreme_value_fit",
-    "window_rank_lag",
-    "variant_props_stats",
-    "srm_check",
-    "text_quality",
-    "token_count",
-    "pii_scrub",
-    "quality_logit_score",
-    "dataset_split",
-    "burstiness",
-    "embedding_quantize",
-    # round-8 batch 5: the remaining TPC-H shapes (not in bench HEADLINE)
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q11_important_parts",
-    "q12_late_shipments",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_join",
-    "q20_supply_threshold",
-    "q22_prospect_customers",
-    # round-8 batch 6 — REGISTRY COMPLETION: the final 48 queries without a
-    # measured 10x ratio (every remaining registry entry).  Mostly light
-    # relational / scalar-function / sampling shapes.  Queries that read
-    # ONLY dimension tables (customer/supplier/part/nation/region, which
-    # the scaled corpus deliberately keeps at sf0.1 — facts grow faster
-    # than dims) are expected to land at ratio ~1.0 by construction; that
-    # is the honest reading (dim-bound, constant under fact growth), not a
-    # measurement artifact.
-    "agg_distinct",
-    "airbyte_record_roundtrip",
-    "ann_ivf_topk",
-    "array_agg_sorted",
-    "array_funcs",
-    "case_when_agg",
-    "central_tendency",
-    "cluster_balanced_sample",
-    "cube_agg",
-    "date_funcs",
-    "doc_fingerprint",
-    "domain_cap",
-    "except_all_bags",
-    "grouping_sets_agg",
-    "gumbel_block_maxima",
-    "hill_tail_index",
-    "inverted_index",
-    "join_anti",
-    "join_outer_coalesce",
-    "join_semi",
-    "lang_id",
-    "locf_fill",
-    "lognormal_fit_orders",
-    "map_funcs",
-    "math_funcs",
-    "null_handling",
-    "ordinal_concordance",
-    "pivot_agg",
-    "price_histogram",
-    "regex_funcs",
-    "rollup_agg",
-    "set_ops_customers",
-    "set_ops_except",
-    "simhash_hamming_pairs",
-    "sql_api_cte",
-    "stats_agg",
-    "stratified_sample",
-    "string_funcs",
-    "systematic_sample",
-    "time_range_moving_avg",
-    "time_rollup",
-    "transfer_entropy_daily",
-    "union_all_agg",
-    "unpivot_metrics",
-    "window_frame_funcs",
-    "window_ntile_dist",
-    "window_topk_per_group",
-    "word_freq_topn",
-]
+# untimed JVM warm-up query
+WARMUP = "minhash_signatures"
 
 
 def build(spark, scale_dir: str = SCALE_DIR, replicas: int = REPLICAS) -> None:
@@ -772,21 +226,23 @@ def main() -> None:
         print("scaled corpus built at", SCALE_DIR, flush=True)
 
     qs = entrymod.queries()
+    only = None
+    for a in sys.argv[1:]:
+        if a.startswith("--only="):
+            only = set(a.split("=", 1)[1].split(","))
+    if only and not only <= set(qs):
+        sys.exit(f"--only names unknown queries: {sorted(only - set(qs))}")
+
     # warm JVM + python worker pool (same policy as bench.py)
     import pandas as _pd  # noqa: F401
 
     spark.range(1024).repartition(32).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
-    qs["minhash_signatures"](spark, SRC).count()
-
-    only = None
-    for a in sys.argv[1:]:
-        if a.startswith("--only="):
-            only = set(a.split("=", 1)[1].split(","))
+    qs[WARMUP](spark, SRC).count()
 
     out: dict[str, dict] = {}
-    for name in QUERIES + RELATIONAL_QUERIES + EVENT_QUERIES + COVERAGE_QUERIES:
+    for name in qs:
         if only and name not in only:
             continue
         rec: dict[str, float] = {}
