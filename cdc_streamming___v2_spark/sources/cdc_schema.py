@@ -34,15 +34,21 @@ ENVELOPE_COLS = ("object", "action", "update_date_raw", "payload_json", "raw")
 # within a JVM, so each parser builds its column lists ONCE per process
 # and every later call is two .select()s over cached expressions.  The
 # cache is keyed per-parser+args; a worst-case concurrent double-build
-# is harmless (last write wins, both values equivalent).
+# is harmless (last write wins, both values equivalent).  Each entry
+# remembers the JVM view its Columns were built on and is rebuilt when
+# the process has since started a new gateway: a Column is a handle into
+# one JVM, and using it after that JVM is gone fails the query.
 _COL_MEMO: dict = {}
 
 
 def _memo_cols(key, build):
-    cols = _COL_MEMO.get(key)
-    if cols is None:
-        cols = _COL_MEMO[key] = build()
-    return cols
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    entry = _COL_MEMO.get(key)
+    if entry is None or entry[0] is not jvm:
+        entry = _COL_MEMO[key] = (jvm, build())
+    return entry[1]
 
 
 def parse_envelope(raw_lines: DataFrame, line_col: str = "value") -> DataFrame:

@@ -11,8 +11,9 @@ Spark-first replacement (SURVEY.md §2.A ops 1-12):
     Pub/Sub notification hop — the file source's listing loop IS "notice new
     object, read it"; GZIP NDJSON decodes transparently) ->
     parse envelope JVM-side (get_json_object; payload kept as raw JSON) ->
-    one append writeStream per registered table: filter on object, from_json
-    with that table's registry schema, enrich action/update_date ->
+    one append writeStream per registered table: filter on object, one
+    from_json per row with that table's registry schema (fields projected
+    from the decoded struct), enrich action/update_date ->
     parquet history table (append-only = the reference's WRITE_APPEND) ->
     plus one dead-letter stream for unmapped/corrupt lines (strictly better
     than the reference's print/raise, py:96-100).
@@ -20,11 +21,14 @@ Spark-first replacement (SURVEY.md §2.A ops 1-12):
 Delivery: checkpointed file sink = exactly-once per sink, upgrading the
 reference's at-least-once (SURVEY.md §4).
 
-Scale: the whole pipeline is narrow (no shuffle) — it scales linearly with
-executors. History tables are written partitioned by ``update_day`` so
-point-in-time reads prune partitions before the SCD2 window shuffle
-(operators/history.py). maxFilesPerTrigger bounds micro-batch size for
-backpressure at high log rates.
+Scale: the pipeline is narrow — it scales linearly with executors. Plain,
+transactional and per-table-stream history tables are written hive-style
+partitioned by ``update_day`` (one co-location shuffle per table, so a day
+lands in one file per trigger) and point-in-time reads prune partitions
+before the SCD2 window shuffle (operators/history.py); commit-log tables
+carry the day as a plain column and are written without a shuffle.
+maxFilesPerTrigger bounds micro-batch size for backpressure at high log
+rates.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -308,7 +313,18 @@ class CdcIngest:
                     for b, a in aliases.items()
                 ],
             ])
-        payload = F.from_json(F.col("payload_json"), parse_schema)
+        # decode the payload ONCE into a struct column and project fields
+        # from it: ``from_json(..).getField(f)`` per field lets Catalyst's
+        # JSON-expression pruning split the decode into one full parse per
+        # field (20 parses per row on a 20-field table); Catalyst does not
+        # inline a projected from_json that the projection above reads
+        # more than once, so the plan keeps a single decode
+        payload = F.col("_payload")
+        parsed = routed.select(
+            F.from_json(F.col("payload_json"), parse_schema).alias("_payload"),
+            "action",
+            "update_date_raw",
+        )
         cols = []
         for f in spec.payload_schema:
             v = payload.getField(f.name)
@@ -321,31 +337,41 @@ class CdcIngest:
                 cols.append(F.col("action").cast(sink_field.dataType).alias("action"))
             else:
                 cols.append(update_date_expr(sink_field.dataType).alias(name))
-        out = routed.select(*cols)
+        out = parsed.select(*cols)
         if self.partition_by_day:
-            ts = F.to_timestamp(F.col("update_date").cast("string"))
-            bucket = (
-                F.to_date(ts)
-                if self.partition_granularity == "day"
-                else F.to_date(F.date_trunc("month", ts))
+            out = out.withColumn(
+                self._partition_col,
+                _partition_bucket(
+                    F.col("update_date"),
+                    spec.schema["update_date"].dataType,
+                    self.partition_granularity,
+                ),
             )
-            out = out.withColumn(self._partition_col, bucket)
-            # co-locate each partition value before the partitioned write:
-            # without this, every write task emits a file into every day dir
-            # it sees (tasks x days tiny files — a backfill spanning years
-            # grinds on file creation); with it, a day's rows land in one
-            # task = one file per day per trigger
-            out = out.repartition(F.col(self._partition_col))
+            if not self.commit_log:
+                # co-locate each partition value before the hive-style
+                # partitionBy write: without this, every write task emits
+                # a file into every day dir it sees (tasks x days tiny
+                # files — a backfill spanning years grinds on file
+                # creation); with it, a day's rows land in one task = one
+                # file per day per trigger.  Commit-log sinks carry the
+                # day as a plain column, so there the shuffle would only
+                # add a job per table and a one-task write tail.
+                out = out.repartition(F.col(self._partition_col))
         return out
 
-    def _dead_letters(self, env: DataFrame) -> DataFrame:
-        """Unmapped objects + corrupt lines, with the raw line preserved."""
+    def _is_dead_letter(self):
+        """Rows no history table takes: unmapped objects, corrupt lines
+        and unparseable change types."""
         known = list(self.registry.object_names)
-        return env.filter(
+        return (
             F.col("object").isNull()
             | ~F.col("object").isin(known)
             | F.col("action").isNull()
-        ).select(
+        )
+
+    def _dead_letters(self, env: DataFrame) -> DataFrame:
+        """Unmapped objects + corrupt lines, with the raw line preserved."""
+        return env.filter(self._is_dead_letter()).select(
             F.col("object"),
             F.col("raw"),
             F.current_timestamp().alias("dead_letter_at"),
@@ -419,115 +445,108 @@ class CdcIngest:
         """
         env = self._read_stream()
 
-        def _append_plain(batch: DataFrame, spec: TableSpec | None) -> None:
-            if spec is None:
-                self._dead_letters(batch).write.mode("append").parquet(
-                    os.path.join(self.output_dir, "_dead_letter")
-                )
-                return
-            self._route_table(batch, spec).write.mode("append").partitionBy(
-                *([self._partition_col] if self.partition_by_day else [])
-            ).parquet(os.path.join(self.output_dir, spec.table_name))
-
-        def _publish_atomic(
-            batch: DataFrame, spec: TableSpec | None, batch_id: int
-        ) -> None:
+        def _publish_one(routed: DataFrame, spec: TableSpec | None,
+                         batch_id: int) -> None:
             table = spec.table_name if spec is not None else "_dead_letter"
             sink = os.path.join(self.output_dir, table)
+            if self.commit_log:
+                from .commitlog import CommitLogTable
+
+                # partition column rides as a normal column here:
+                # commit-log tables skip hive-style dirs (file pruning
+                # would come from per-file stats in the manifest, the
+                # Delta/Iceberg approach), so _route_table adds no
+                # co-location shuffle and the publish is one narrow job
+                CommitLogTable(self.spark, sink).write_append(
+                    routed, txn=f"batch-{batch_id}"
+                )
+                return
+            parts = (
+                [self._partition_col]
+                if self.partition_by_day and spec is not None
+                else []
+            )
+            if not self.transactional:
+                routed.write.mode("append").partitionBy(*parts).parquet(sink)
+                return
             final = os.path.join(sink, f"batch={batch_id}")
             if os.path.exists(final):
                 return  # this (table, batch) already published — replay
             staging = os.path.join(sink, f"_staging_{batch_id}")
-            routed = (
-                self._dead_letters(batch)
-                if spec is None
-                else self._route_table(batch, spec)
+            routed.write.mode("overwrite").partitionBy(*parts).parquet(
+                staging
             )
-            routed.write.mode("overwrite").partitionBy(
-                *(
-                    [self._partition_col]
-                    if self.partition_by_day and spec is not None
-                    else []
-                )
-            ).parquet(staging)
             os.rename(staging, final)
-
-        def _publish_commit_log(
-            batch: DataFrame, spec: TableSpec | None, batch_id: int
-        ) -> None:
-            from .commitlog import CommitLogTable
-
-            table = spec.table_name if spec is not None else "_dead_letter"
-            routed = (
-                self._dead_letters(batch)
-                if spec is None
-                else self._route_table(batch, spec)
-            )
-            # partition column rides as a normal column here: commit-log
-            # tables skip hive-style dirs (file pruning would come from
-            # per-file stats in the manifest, the Delta/Iceberg approach)
-            CommitLogTable(
-                self.spark, os.path.join(self.output_dir, table)
-            ).write_append(routed, txn=f"batch-{batch_id}")
-
-        def _publish_one(batch: DataFrame, spec: TableSpec | None,
-                         batch_id: int) -> None:
-            if self.commit_log:
-                _publish_commit_log(batch, spec, batch_id)
-            elif self.transactional:
-                _publish_atomic(batch, spec, batch_id)
-            else:
-                _append_plain(batch, spec)
 
         def _write_batch(batch: DataFrame, batch_id: int) -> None:
             self._maybe_reload_registry()
             marker = os.path.join(self.checkpoint_dir, "_batches", str(batch_id))
             if os.path.exists(marker):
                 return
+            specs = [*self.registry, None]  # None = dead-letter sink
+            # only the dead-letter sink reads the raw line, the widest
+            # cached column: keep it for dead-letter rows alone
+            batch = batch.withColumn(
+                "raw", F.when(self._is_dead_letter(), F.col("raw"))
+            )
             batch.persist()
             try:
-                # materialize the cache ONCE before fanning out so
-                # concurrent sink jobs don't race to compute (and
-                # double-parse) the envelope batch.  Inside the try so a
-                # failed materialization job (e.g. a parse error) still
-                # unpersists (ADVICE r11).
-                batch.count()
-                specs = [*self.registry, None]  # None = dead-letter sink
-                if self.transactional or self.commit_log:
-                    # per-sink publishes are independent Spark jobs over
-                    # the cached batch (disjoint table/dead-letter dirs;
-                    # commit-log tables are single-writer PER TABLE):
-                    # overlap them from a small driver pool so each tiny
-                    # write's job+commit overhead back-fills the others'
-                    # idle tail (guide-§2.6 shape; measured r11 — see
-                    # OPTIMIZATION_r11.md).  Failures propagate via
-                    # future.result(), so a failed sink still fails the
-                    # batch BEFORE the marker is written — the
-                    # crash-replay contract is unchanged.  Both modes are
-                    # per-(table, batch) idempotent, so a replayed batch
-                    # re-publishing an arbitrary SUBSET of sinks is safe.
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(
-                        max_workers=min(4, len(specs))
-                    ) as pool:
+                with ThreadPoolExecutor(
+                    max_workers=min(4, len(specs))
+                ) as pool:
+                    # materialize the cache ONCE before fanning out so
+                    # concurrent sink jobs don't race to compute (and
+                    # double-parse) the envelope batch.  A noop write
+                    # fills it in one narrow job (count() under AQE runs
+                    # as three jobs around a shuffle); the driver builds
+                    # the sink plans meanwhile, a few hundred py4j calls
+                    # per table.  Inside the try so a failed
+                    # materialization job (e.g. a parse error) still
+                    # unpersists (ADVICE r11).
+                    fill = pool.submit(
+                        batch.write.format("noop").mode("overwrite").save
+                    )
+                    sinks = [
+                        (
+                            self._dead_letters(batch)
+                            if spec is None
+                            else self._route_table(batch, spec),
+                            spec,
+                        )
+                        for spec in specs
+                    ]
+                    fill.result()
+                    if self.transactional or self.commit_log:
+                        # per-sink publishes are independent Spark jobs
+                        # over the cached batch (disjoint table/dead-letter
+                        # dirs; commit-log tables are single-writer PER
+                        # TABLE): overlap them from a small driver pool so
+                        # each tiny write's job+commit overhead back-fills
+                        # the others' idle tail (guide-§2.6 shape;
+                        # measured r11 — see OPTIMIZATION_r11.md).
+                        # Failures propagate via future.result(), so a
+                        # failed sink still fails the batch BEFORE the
+                        # marker is written — the crash-replay contract is
+                        # unchanged.  Both modes are per-(table, batch)
+                        # idempotent, so a replayed batch re-publishing an
+                        # arbitrary SUBSET of sinks is safe.
                         futs = [
-                            pool.submit(_publish_one, batch, spec, batch_id)
-                            for spec in specs
+                            pool.submit(_publish_one, routed, spec, batch_id)
+                            for routed, spec in sinks
                         ]
                         for f in futs:
                             f.result()
-                else:
-                    # plain append mode: sequential, in registry order —
-                    # a sink failure stops LATER sinks, so a crash-replay
-                    # duplicates at most a PREFIX of the sink list (the
-                    # documented at-least-once window).  Pooling here
-                    # widened that window to an arbitrary subset for a
-                    # mode with no per-sink idempotence guard (ADVICE
-                    # r11); the overlap win belongs to the two
-                    # exactly-once modes above.
-                    for spec in specs:
-                        _publish_one(batch, spec, batch_id)
+                    else:
+                        # plain append mode: sequential, in registry order
+                        # — a sink failure stops LATER sinks, so a
+                        # crash-replay duplicates at most a PREFIX of the
+                        # sink list (the documented at-least-once window).
+                        # Pooling here widened that window to an arbitrary
+                        # subset for a mode with no per-sink idempotence
+                        # guard (ADVICE r11); the overlap win belongs to
+                        # the two exactly-once modes above.
+                        for routed, spec in sinks:
+                            _publish_one(routed, spec, batch_id)
             finally:
                 batch.unpersist()
             os.makedirs(os.path.dirname(marker), exist_ok=True)
@@ -1386,6 +1405,22 @@ def main(argv: list[str] | None = None) -> int:
         for q in ingest.start():
             q.awaitTermination()
     return 0
+
+
+def _partition_bucket(update_date, dtype, granularity: str):
+    """The partition value (a DATE) of a history row's ``update_date``.
+
+    A TIMESTAMP column is bucketed directly, with no per-row format and
+    re-parse; a STRING one is parsed to a timestamp first (the reference
+    registry declares one table's ``update_date`` as STRING,
+    data-stream.json:17)."""
+    if isinstance(dtype, T.TimestampType):
+        ts = update_date
+    else:
+        ts = F.to_timestamp(update_date.cast("string"))
+    if granularity == "day":
+        return F.to_date(ts)
+    return F.to_date(F.date_trunc("month", ts))
 
 
 def _with_partition_col(

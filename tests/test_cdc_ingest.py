@@ -2000,3 +2000,154 @@ def test_registry_evolution_rename_admission_rules():
                  {"name": "z", "type": "STRING",
                   "renamed_from": "never_was"}, *eng])
     assert base.check_evolution_full(inert) == ({}, {})
+
+
+def test_single_pass_batch_runs_one_job_per_sink(spark, tmp_path):
+    """A commit-log micro-batch runs one job to fill the batch cache and
+    one per sink (each table + the dead letter): no count() shuffle jobs,
+    no co-location shuffle in front of a sink that has no partition
+    dirs, and the dead-letter sink still gets each raw line."""
+    from cdc_streamming___v2_spark.sources.conformance import (
+        CONFORMANCE_REGISTRY,
+    )
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    with open(os.path.join(in_dir, "b.jsonl"), "w") as f:
+        f.write("\n".join(LINES) + "\n")
+    registry = SchemaRegistry.from_dict(CONFORMANCE_REGISTRY)
+    ing = CdcIngest(
+        spark=spark,
+        registry=registry,
+        input_dir=in_dir,
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        commit_log=True,
+    )
+    assert not spark.streams.active  # nothing else may start jobs
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    ing.run_available_single_pass()
+    assert dag.nextJobId() - before == len(registry) + 2
+    assert ing.history("olist_produtos").count() == 4
+    assert ing.history("olist_users").count() == 1
+    # the batch cache keeps raw lines for dead-letter rows only
+    assert sorted(r.raw for r in ing.dead_letter().collect()) == sorted(
+        LINES[5:]
+    )
+
+
+def test_single_parse_keeps_fields_beside_a_bad_one(spark, tmp_path):
+    """Decoding the whole payload once gives the same row as decoding
+    each field on its own: one bad field nulls only itself (Spark's
+    default ``spark.sql.json.enablePartialResults``), a duplicate key
+    keeps its last value, a truncated payload nulls every field."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    registry = SchemaRegistry.from_dict(REGISTRY_DOC)
+    spec = registry.get("olist_produtos")
+    payloads = [
+        # quoted number in an INT64 field
+        '{"product_id": "p1", "product_category_name": "toys", '
+        '"product_photos_qty": "3", "product_weight_g": 1.5}',
+        # object in a FLOAT field
+        '{"product_id": "p2", "product_category_name": "toys", '
+        '"product_photos_qty": 3, "product_weight_g": {"g": 1}}',
+        # duplicate key
+        '{"product_id": "p3", "product_id": "p4", '
+        '"product_category_name": "toys", "product_photos_qty": 3, '
+        '"product_weight_g": 1.5}',
+        # truncated line
+        '{"product_id": "p5", "product_category_name": "toys", '
+        '"product_photos_qty": 3, "product_wei',
+    ]
+    env = spark.createDataFrame(
+        [
+            ("olist_produtos", "INSERT", "2024-01-01T00:00:00Z", p, p)
+            for p in payloads
+        ],
+        "object string, action string, update_date_raw string, "
+        "payload_json string, raw string",
+    )
+    ing = CdcIngest(
+        spark=spark,
+        registry=registry,
+        input_dir=str(tmp_path / "in"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        partition_by_day=False,
+    )
+    names = [f.name for f in spec.payload_schema]
+    got = ing._route_table(env, spec).select(*names).collect()
+    per_field = env.select(*[
+        F.from_json("payload_json", T.StructType([f]))
+        .getField(f.name).alias(f.name)
+        for f in spec.payload_schema
+    ]).collect()
+    assert got == per_field
+    assert [tuple(r) for r in got] == [
+        ("p1", "toys", None, 1.5),
+        ("p2", "toys", 3, None),
+        ("p4", "toys", 3, 1.5),
+        (None, None, None, None),
+    ]
+
+
+@pytest.mark.parametrize("granularity", ["day", "month"])
+def test_timestamp_partition_bucket_matches_string_round_trip(
+    spark, granularity
+):
+    """A TIMESTAMP ``update_date`` is bucketed directly; the result equals
+    the format-to-string-and-parse-back bucket it replaces, on
+    microsecond timestamps, day and month boundaries and NULL."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from cdc_streamming___v2_spark.streaming.ingest import _partition_bucket
+
+    values = [
+        dt.datetime(2024, 1, 1, 0, 0, 0),
+        dt.datetime(2024, 1, 1, 23, 59, 59, 999999),
+        dt.datetime(2024, 1, 2, 0, 0, 0, 1),
+        dt.datetime(2024, 1, 31, 23, 59, 59, 999999),
+        dt.datetime(2024, 2, 29, 12, 30, 15, 123456),
+        dt.datetime(1999, 12, 31, 23, 59, 59, 999999),
+        None,
+    ]
+    df = spark.createDataFrame([(v,) for v in values], "u timestamp")
+    u = F.col("u")
+    ts = F.to_timestamp(u.cast("string"))
+    old = (
+        F.to_date(ts) if granularity == "day"
+        else F.to_date(F.date_trunc("month", ts))
+    )
+    new = _partition_bucket(u, T.TimestampType(), granularity)
+    rows = df.select(old.alias("old"), new.alias("new")).collect()
+    assert all(r.old == r.new for r in rows)
+    assert rows[-1].new is None
+    assert sum(r.new is not None for r in rows) == len(values) - 1
+
+
+def test_column_memo_never_returns_columns_of_a_stale_jvm(spark):
+    """A memoized envelope Column is a handle into the JVM it was built
+    on; an entry stored under any other JVM is rebuilt, never returned."""
+    from cdc_streamming___v2_spark.sources import cdc_schema
+
+    key = ("test-stale-jvm",)
+    stale = object()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return "fresh"
+
+    cdc_schema._COL_MEMO[key] = (object(), stale)
+    try:
+        assert cdc_schema._memo_cols(key, build) == "fresh"
+        assert cdc_schema._memo_cols(key, build) == "fresh"
+        assert len(builds) == 1
+    finally:
+        cdc_schema._COL_MEMO.pop(key, None)

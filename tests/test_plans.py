@@ -886,8 +886,9 @@ def test_replay_routing_is_narrow_single_exchange(spark, tmp_path):
     like live ingest: the per-table write plan must be NARROW — one
     Exchange (the partition co-location repartition), no join, no
     aggregate — so replay throughput scales linearly with quarantine
-    size at any cluster width."""
-    import json as _json
+    size at any cluster width.  Commit-log sinks carry the partition day
+    as a plain column, so their route plan has no Exchange at all."""
+    import dataclasses
     import os
 
     from cdc_streamming___v2_spark.sources.registry import SchemaRegistry
@@ -918,4 +919,46 @@ def test_replay_routing_is_narrow_single_exchange(spark, tmp_path):
     p = _plan(spark, routed)
     assert "Join" not in p and "Aggregate" not in p
     # exactly the co-location repartition, nothing else wide
+    assert "Exchange" in p
     assert p.count("Exchange") <= 2  # formatted lists tree + detail
+    p_log = _plan(
+        spark,
+        dataclasses.replace(ing, commit_log=True)._route_table(env, spec),
+    )
+    assert "Join" not in p_log and "Aggregate" not in p_log
+    assert "Exchange" not in p_log
+
+
+def test_route_table_parses_payload_once(spark, tmp_path):
+    """However wide the table, a routed row's payload is decoded by ONE
+    from_json: projecting each field off a from_json column lets
+    Catalyst split the decode into one full parse per field."""
+    from cdc_streamming___v2_spark.sources.registry import SchemaRegistry
+    from cdc_streamming___v2_spark.streaming.ingest import CdcIngest
+
+    fields = [{"name": f"c{i}", "type": "STRING"} for i in range(5)]
+    fields += [
+        {"name": "qty", "type": "INT64", "renamed_from": "quantity"},
+        {"name": "action", "type": "STRING"},
+        {"name": "update_date", "type": "TIMESTAMP"},
+    ]
+    reg = SchemaRegistry.from_dict(
+        {"wide": {"table_name": "wide_cdc", "schema": {"fields": fields}}}
+    )
+    spec = reg.get("wide")
+    assert len(spec.payload_schema) >= 6 and spec.renames
+    env = CdcIngest._parse_lines(
+        spark.createDataFrame([], "value string"), "datastream"
+    )
+    for commit_log in (False, True):
+        ing = CdcIngest(
+            spark=spark,
+            registry=reg,
+            input_dir=str(tmp_path / "in"),
+            output_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ck"),
+            commit_log=commit_log,
+        )
+        routed = ing._route_table(env, spec)
+        plan = routed._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 1, plan
