@@ -1,12 +1,12 @@
-"""Manifest-based commit log for parquet tables — the object-store-portable
-successor to the rename-based transactional publish in ingest.py.
+"""Manifest-based commit log for parquet tables — the engine's one
+exactly-once publish path (ingest.py's commit-log sinks, snapshot.py's views).
 
 The reference's sink is BigQuery ``WRITE_APPEND`` with no dedup key
 (src/dataflow-cdc-stream.py:86-92), which is at-least-once: a Dataflow retry
-after a partial write duplicates history rows. ``ingest.py`` fixed that with
-an atomic directory rename per (table, batch) — correct locally, but object
-stores have no atomic rename. This module removes the rename dependency the
-way Delta Lake / Iceberg do (public designs — Armbrust et al., VLDB 2020):
+after a partial write duplicates history rows. This module makes every
+(table, batch) publish exactly-once without relying on an atomic directory
+rename (object stores have none), the way Delta Lake / Iceberg do (public
+designs — Armbrust et al., VLDB 2020):
 
 - data files land under ``data/<txn>/`` in any order, possibly half-written;
 - READERS NEVER LIST THE DATA DIRECTORY — they read exactly the files named

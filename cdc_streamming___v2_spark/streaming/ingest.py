@@ -18,15 +18,18 @@ Spark-first replacement (SURVEY.md §2.A ops 1-12):
     plus one dead-letter stream for unmapped/corrupt lines (strictly better
     than the reference's print/raise, py:96-100).
 
-Delivery: checkpointed file sink = exactly-once per sink, upgrading the
-reference's at-least-once (SURVEY.md §4).
+Delivery: the per-table checkpointed file sinks are exactly-once per sink;
+single-pass commit-log sinks (streaming/commitlog.py) are exactly-once per
+(table, micro-batch) through ``batch-<id>`` txn ids; single-pass plain
+sinks may duplicate a prefix of the sink list after a crash. Both
+exactly-once modes upgrade the reference's at-least-once (SURVEY.md §4).
 
-Scale: the pipeline is narrow — it scales linearly with executors. Plain,
-transactional and per-table-stream history tables are written hive-style
-partitioned by ``update_day`` (one co-location shuffle per table, so a day
-lands in one file per trigger) and point-in-time reads prune partitions
-before the SCD2 window shuffle (operators/history.py); commit-log tables
-carry the day as a plain column and are written without a shuffle.
+Scale: the pipeline is narrow — it scales linearly with executors. Plain
+and per-table-stream history tables are written hive-style partitioned by
+``update_day`` (one co-location shuffle per table, so a day lands in one
+file per trigger) and point-in-time reads prune partitions before the
+SCD2 window shuffle (operators/history.py); commit-log tables carry the
+day as a plain column and are written without a shuffle.
 maxFilesPerTrigger bounds micro-batch size for backpressure at high log
 rates.
 """
@@ -61,21 +64,15 @@ from ..sources.cdc_schema import (
     update_date_expr,
 )
 from ..sources.registry import ENGINE_COLUMNS, SchemaRegistry, TableSpec
+from .commitlog import CommitLogTable
 
+DEAD_LETTER_SCHEMA = T.StructType([
+    T.StructField("object", T.StringType(), True),
+    T.StructField("raw", T.StringType(), True),
+    T.StructField("dead_letter_at", T.TimestampType(), True),
+])
 
-def _dead_letter_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType([
-        T.StructField("object", T.StringType(), True),
-        T.StructField("raw", T.StringType(), True),
-        T.StructField("dead_letter_at", T.TimestampType(), True),
-    ])
-
-
-DEAD_LETTER_SCHEMA = _dead_letter_schema()
-
-# dead-letter replay swap-in-flight marker (plain/transactional modes):
+# dead-letter replay swap-in-flight marker (plain mode):
 # written before the two-rename swap, removed after the tomb is sealed —
 # _recover_replay_swap completes a crashed swap from it
 _REPLAY_SIDECAR = "_dead_letter_replay_inflight.json"
@@ -98,8 +95,7 @@ def _parquet_relpaths(root: str) -> list[str]:
 def _move_fresh_parquet(tomb: str, staging: str, inventory: set) -> int:
     """Move parquet files under ``tomb`` that are NOT in the pinned
     ``inventory`` (rows a concurrent ingest quarantined after the replay
-    snapshot) into ``staging``, preserving relative layout (plain mode:
-    root part files; transactional mode: batch=N subdirs). Spark part
+    snapshot) into ``staging``, preserving relative layout. Spark part
     file names embed task UUIDs, so collisions cannot occur."""
     moved = 0
     for rel in _parquet_relpaths(tomb):
@@ -116,8 +112,6 @@ def _truncate_tomb(tomb: str) -> None:
     """Seal a replay tomb down to an empty directory: only its NAME is
     load-bearing (generation counting), so keeping the pre-swap parquet
     copy forever is unbounded disk growth (ADVICE r9)."""
-    import shutil
-
     for n in os.listdir(tomb):
         p = os.path.join(tomb, n)
         if os.path.isdir(p):
@@ -178,13 +172,8 @@ class CdcIngest:
     # sinks, dead-letter — is envelope-agnostic (sources/cdc_schema.py).
     envelope_format: str = "datastream"
     kafka_options: dict[str, str] = field(default_factory=dict)
-    # single-pass mode only: publish each (table, micro-batch) atomically
-    # via staging-dir rename, closing the crash window between the first
-    # table write and the batch marker (see start_single_pass)
-    transactional: bool = False
     # single-pass mode only: exactly-once via the manifest commit log
-    # (streaming/commitlog.py) instead of directory renames — the
-    # object-store-portable variant; readers resolve files through the log,
+    # (streaming/commitlog.py); readers resolve files through the log,
     # uncommitted data is invisible, replays are txn-id no-ops.
     commit_log: bool = False
     # single-pass mode only: re-stat ``registry_path`` once per micro-batch
@@ -431,17 +420,13 @@ class CdcIngest:
 
         Delivery: a batch-id marker commits each micro-batch after all
         sinks are written, so replays after a crash skip completed batches.
-        With ``transactional=False`` duplicates are possible if the crash
-        lands between the first table write and the marker. With
-        ``transactional=True`` each (table, batch) is staged into a hidden
-        ``_staging`` directory and PUBLISHED by one atomic rename into a
-        ``batch=<id>`` partition directory; a replayed batch skips tables
-        whose batch directory already exists, so every (table, batch) lands
-        exactly once no matter where a crash falls — readers never see
-        partial files (underscore paths are invisible to Spark scans).
-        This is the manifest-free core of what a transactional table format
-        provides; on a rename-less object store, swap the rename for a
-        manifest write (same idempotence argument).
+        Plain sinks append in registry order, so a crash between the first
+        table write and the marker duplicates at most a prefix of the sink
+        list on replay. Commit-log sinks publish each (table, batch) under
+        the txn id ``batch-<id>``: a replayed batch finds its txn already
+        committed and skips that table, so every (table, batch) lands
+        exactly once no matter where a crash falls, and readers never see
+        uncommitted files.
         """
         env = self._read_stream()
 
@@ -450,8 +435,6 @@ class CdcIngest:
             table = spec.table_name if spec is not None else "_dead_letter"
             sink = os.path.join(self.output_dir, table)
             if self.commit_log:
-                from .commitlog import CommitLogTable
-
                 # partition column rides as a normal column here:
                 # commit-log tables skip hive-style dirs (file pruning
                 # would come from per-file stats in the manifest, the
@@ -466,17 +449,7 @@ class CdcIngest:
                 if self.partition_by_day and spec is not None
                 else []
             )
-            if not self.transactional:
-                routed.write.mode("append").partitionBy(*parts).parquet(sink)
-                return
-            final = os.path.join(sink, f"batch={batch_id}")
-            if os.path.exists(final):
-                return  # this (table, batch) already published — replay
-            staging = os.path.join(sink, f"_staging_{batch_id}")
-            routed.write.mode("overwrite").partitionBy(*parts).parquet(
-                staging
-            )
-            os.rename(staging, final)
+            routed.write.mode("append").partitionBy(*parts).parquet(sink)
 
         def _write_batch(batch: DataFrame, batch_id: int) -> None:
             self._maybe_reload_registry()
@@ -516,7 +489,7 @@ class CdcIngest:
                         for spec in specs
                     ]
                     fill.result()
-                    if self.transactional or self.commit_log:
+                    if self.commit_log:
                         # per-sink publishes are independent Spark jobs
                         # over the cached batch (disjoint table/dead-letter
                         # dirs; commit-log tables are single-writer PER
@@ -527,7 +500,7 @@ class CdcIngest:
                         # Failures propagate via future.result(), so a
                         # failed sink still fails the batch BEFORE the
                         # marker is written — the crash-replay contract is
-                        # unchanged.  Both modes are per-(table, batch)
+                        # unchanged.  Each publish is per-(table, batch)
                         # idempotent, so a replayed batch re-publishing an
                         # arbitrary SUBSET of sinks is safe.
                         futs = [
@@ -544,7 +517,7 @@ class CdcIngest:
                         # Pooling here widened that window to an arbitrary
                         # subset for a mode with no per-sink idempotence
                         # guard (ADVICE r11); the overlap win belongs to
-                        # the two exactly-once modes above.
+                        # the exactly-once commit-log mode above.
                         for routed, spec in sinks:
                             _publish_one(routed, spec, batch_id)
             finally:
@@ -588,10 +561,9 @@ class CdcIngest:
         2. rows that now parse AND route to a registered table append to
            their history sinks through the exact ``_route_table`` plan the
            live stream uses — commit-log mode appends under a
-           content-derived txn id (replays are no-ops), transactional mode
-           publishes a ``batch=<replay_id>`` directory by atomic rename
-           (existence check = idempotence), plain mode appends directly
-           (at-least-once, matching plain ingest's own guarantee);
+           content-derived txn id (replays are no-ops), plain mode moves
+           staged files in behind a per-replay ``.done`` marker
+           (``_plain_replay_append``);
         3. rows that STILL fail re-quarantine: the dead-letter sink is
            atomically replaced with only the still-dead remainder (rename
            swap; ``write_replace`` single-commit swap in commit-log mode),
@@ -618,7 +590,7 @@ class CdcIngest:
         those files, so rows quarantined by a concurrently running
         ingest AFTER the snapshot survive it (commit-log mode: the
         replace commit lists the pinned files and raises if they were
-        superseded; plain/transactional mode: files that appeared after
+        superseded; plain mode: files that appeared after
         the snapshot are carried over into the swapped-in quarantine
         before the tomb is sealed). The recommended operating mode is
         still SINGLE-WRITER — drain or stop the ingest stream first —
@@ -662,8 +634,8 @@ class CdcIngest:
         # swapping the quarantine directory would orphan the log — a
         # silent-data-loss shape, so refuse loudly instead.  Replay is
         # supported for the single-pass sink layouts (plain /
-        # transactional / commit-log), which every documented production
-        # configuration uses.
+        # commit-log), which every documented production configuration
+        # uses.
         sink_dirs = [dl_dir] + [
             os.path.join(self.output_dir, s.table_name)
             for s in self.registry
@@ -683,8 +655,6 @@ class CdcIngest:
         # appends (new files) are never part of the replay set and never
         # removed by the swap (ADVICE r9)
         if self.commit_log:
-            from .commitlog import CommitLogTable
-
             dl_snapshot_files = CommitLogTable(
                 self.spark, dl_dir
             ).snapshot_files()
@@ -757,19 +727,9 @@ class CdcIngest:
                 [self._partition_col] if self.partition_by_day else []
             )
             if self.commit_log:
-                from .commitlog import CommitLogTable
-
                 CommitLogTable(self.spark, sink).write_append(
                     routed, txn=f"replay-{replay_id}"
                 )
-            elif self.transactional:
-                final = os.path.join(sink, f"batch={replay_id}")
-                if not os.path.exists(final):
-                    staging = os.path.join(sink, f"_staging_r{replay_id}")
-                    routed.write.mode("overwrite").partitionBy(
-                        *part_cols
-                    ).parquet(staging)
-                    os.rename(staging, final)
             else:
                 self._plain_replay_append(
                     routed, sink, part_cols, replay_id
@@ -779,31 +739,20 @@ class CdcIngest:
         # removing exactly the pinned snapshot files, so concurrent
         # appends survive
         if self.commit_log:
-            from .commitlog import CommitLogTable
-
             CommitLogTable(self.spark, dl_dir).write_replace(
                 remainder.repartition(1),
                 txn=f"replay-dl-{replay_id}",
                 remove=dl_snapshot_files,
             )
         else:
-            if self.transactional:
-                # keep the batch=<id> layout subsequent micro-batches write
-                out_rows = remainder.withColumn(
-                    "batch", F.lit(replay_id).cast("long")
-                )
-                part_cols = ["batch"]
-            else:
-                out_rows = remainder
-                part_cols = []
             staging = os.path.join(
                 self.output_dir, f"_dead_letter_staging_{replay_id}"
             )
             # repartition(1): a zero-row frame still emits one
             # schema-bearing file, keeping the swapped sink readable
-            out_rows.repartition(1).write.mode("overwrite").partitionBy(
-                *part_cols
-            ).parquet(staging)
+            remainder.repartition(1).write.mode("overwrite").parquet(
+                staging
+            )
             tomb = os.path.join(
                 self.output_dir, f"_dead_letter_replayed_{replay_id}"
             )
@@ -981,13 +930,11 @@ class CdcIngest:
 
     def _replay_generation(self, dl_dir: str) -> int:
         """How many quarantine swaps have COMPLETED — the tomb count in
-        plain/transactional mode, the ``replay-dl-*`` txn count in
-        commit-log mode. Advances exactly when a swap lands, so it is
-        stable across a crash-and-rerun of an in-flight replay and fresh
-        for a genuinely new one."""
+        plain mode, the ``replay-dl-*`` txn count in commit-log mode.
+        Advances exactly when a swap lands, so it is stable across a
+        crash-and-rerun of an in-flight replay and fresh for a genuinely
+        new one."""
         if self.commit_log:
-            from .commitlog import CommitLogTable
-
             return sum(
                 1
                 for t in CommitLogTable(self.spark, dl_dir).committed_txns()
@@ -1015,13 +962,11 @@ class CdcIngest:
         the rewrite.  The compaction txn id derives from the table's
         current version, so a crashed-and-rerun maintain() is a no-op on
         tables it already compacted (txn replay) and simply resumes the
-        rest.  Commit-log mode only: plain/transactional sinks have no
-        manifest, so an in-place rewrite could never be atomic — callers
-        get a loud error instead of a torn table."""
+        rest.  Commit-log mode only: plain sinks have no manifest, so an
+        in-place rewrite could never be atomic — callers get a loud error
+        instead of a torn table."""
         if not self.commit_log:
             raise ValueError("maintain() requires commit_log=True sinks")
-        from .commitlog import CommitLogTable
-
         report: dict[str, dict] = {}
         tables = [s.table_name for s in self.registry] + ["_dead_letter"]
         for name in tables:
@@ -1153,34 +1098,18 @@ class CdcIngest:
         # reverse — exactly one leg is ever non-null because admission
         # retires the old name and forbids its re-add)
         chains, extra = self._continuity_fields(spec)
+        schema = T.StructType([
+            *_with_partition_col(
+                spec, self._partition_col if self.partition_by_day else None
+            ).fields,
+            *extra,
+        ])
+        path = os.path.join(self.output_dir, spec.table_name)
         if self.commit_log:
-            from .commitlog import CommitLogTable
-
-            df = CommitLogTable(
-                self.spark, os.path.join(self.output_dir, spec.table_name)
-            ).read(
-                T.StructType([
-                    *_with_partition_col(
-                        spec,
-                        self._partition_col
-                        if self.partition_by_day else None,
-                    ).fields,
-                    *extra,
-                ])
-            )
-            return self._apply_continuity(df, spec, chains, extra)
-        df = self.spark.read.schema(
-            T.StructType([
-                *_with_partition_col(
-                    spec,
-                    self._partition_col if self.partition_by_day else None,
-                    batch_col=self.transactional,
-                ).fields,
-                *extra,
-            ])
-        ).parquet(os.path.join(self.output_dir, spec.table_name))
-        df = self._apply_continuity(df, spec, chains, extra)
-        return df.drop("batch") if self.transactional else df
+            df = CommitLogTable(self.spark, path).read(schema)
+        else:
+            df = self.spark.read.schema(schema).parquet(path)
+        return self._apply_continuity(df, spec, chains, extra)
 
     def _continuity_fields(
         self, spec: TableSpec
@@ -1234,25 +1163,14 @@ class CdcIngest:
         return df.select(*cols)
 
     def dead_letter(self) -> DataFrame:
+        path = os.path.join(self.output_dir, "_dead_letter")
         if self.commit_log:
-            from .commitlog import CommitLogTable
-
             # explicit schema so a fully-replayed (empty) quarantine still
             # reads as an empty typed frame instead of raising
-            return CommitLogTable(
-                self.spark, os.path.join(self.output_dir, "_dead_letter")
-            ).read(schema=DEAD_LETTER_SCHEMA)
-        schema = DEAD_LETTER_SCHEMA
-        if self.transactional:
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [*schema.fields, T.StructField("batch", T.LongType(), True)]
+            return CommitLogTable(self.spark, path).read(
+                schema=DEAD_LETTER_SCHEMA
             )
-        df = self.spark.read.schema(schema).parquet(
-            os.path.join(self.output_dir, "_dead_letter")
-        )
-        return df.drop("batch") if self.transactional else df
+        return self.spark.read.schema(DEAD_LETTER_SCHEMA).parquet(path)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -1311,8 +1229,6 @@ def main(argv: list[str] | None = None) -> int:
                    default="day")
     p.add_argument("--no-partition", action="store_true",
                    help="write history tables unpartitioned")
-    p.add_argument("--transactional", action="store_true",
-                   help="single-pass: atomic batch-dir publication")
     p.add_argument("--commit-log", action="store_true",
                    help="single-pass: manifest commit-log sinks")
     p.add_argument("--hot-reload", action="store_true",
@@ -1351,11 +1267,10 @@ def main(argv: list[str] | None = None) -> int:
         if not sep:
             p.error(f"--kafka-option needs KEY=VALUE, got {kv!r}")
         kafka_options[k] = v
-    if args.mode == "per-table" and (
-        args.transactional or args.commit_log or args.hot_reload
-    ):
-        p.error("--transactional/--commit-log/--hot-reload need "
-                "--mode single-pass")
+    if args.mode == "per-table" and (args.commit_log or args.hot_reload):
+        p.error("--commit-log/--hot-reload need --mode single-pass")
+    if args.maintain and not args.commit_log:
+        p.error("--maintain needs --commit-log")
 
     spark = get_spark("cdc-ingest", cpus=args.cpus)
     ingest = CdcIngest(
@@ -1368,7 +1283,6 @@ def main(argv: list[str] | None = None) -> int:
         source_format=args.source_format,
         envelope_format=args.envelope_format,
         kafka_options=kafka_options,
-        transactional=args.transactional,
         commit_log=args.commit_log,
         max_files_per_trigger=args.max_files_per_trigger,
         partition_by_day=not args.no_partition,
@@ -1378,19 +1292,15 @@ def main(argv: list[str] | None = None) -> int:
         allow_column_drops=args.allow_column_drops,
     )
     if args.replay_dead_letters:
-        import json as _json
-
         stats = ingest.replay_dead_letters()
-        print(_json.dumps(stats), flush=True)
+        print(json.dumps(stats), flush=True)
         return 0
     if args.maintain:
-        import json as _json
-
         report = ingest.maintain(
             max_files=args.maintain_max_files,
             min_age_seconds=args.maintain_min_age,
         )
-        print(_json.dumps(report), flush=True)
+        print(json.dumps(report), flush=True)
         return 0
     if args.trigger == "available-now":
         if args.mode == "single-pass":
@@ -1423,14 +1333,8 @@ def _partition_bucket(update_date, dtype, granularity: str):
     return F.to_date(F.date_trunc("month", ts))
 
 
-def _with_partition_col(
-    spec: TableSpec, partition_col: str | None, batch_col: bool = False
-):
-    from pyspark.sql import types as T
-
+def _with_partition_col(spec: TableSpec, partition_col: str | None):
     fields = list(spec.schema.fields)
-    if batch_col:
-        fields.append(T.StructField("batch", T.LongType(), True))
     if partition_col is not None:
         fields.append(T.StructField(partition_col, T.DateType(), True))
     return T.StructType(fields)

@@ -10,62 +10,47 @@ equivalent to the full-log window in operators/merge_ops.cdc_merge_apply.
 Each batch is first reduced to one row per key (newest wins), then merged
 with the previous snapshot version. Tombstone rows are RETAINED in storage
 (so late replays of older versions cannot resurrect deleted keys) and
-hidden by the ``current()`` serving view. Writes go to
-alternating version directories (v0/v1) with an atomic pointer file — the
-parquet stand-in for what Delta/Iceberg transactions give you; swap
-``_write_version`` for a real ``MERGE INTO`` when a table format is
-available.
+hidden by the ``current()`` serving view. Each merged version is published
+through the manifest commit log (streaming/commitlog.py) as one replace
+commit under the txn id ``batch-<id>``, so a micro-batch Spark re-delivers
+after a crash is a no-op instead of a second merge.
 
 Scale: per batch the work is (delta shuffle on key) + (join against the
-snapshot). The snapshot side is key-partitioned on disk, so at 100 TB the
-join co-partitions instead of re-shuffling the full snapshot; the delta is
-micro-batch-sized. Compare: recomputing latest-state from history re-windows
-the ENTIRE log every refresh.
+snapshot). The delta is micro-batch-sized; the snapshot side is
+key-cardinality-sized and re-shuffled on the key for the join. Compare:
+recomputing latest-state from history re-windows the ENTIRE log every
+refresh.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.history import _latest_version
+from .commitlog import CommitLogTable
 
 
 @dataclass
 class _VersionedTable:
-    """Alternating-version parquet table with an atomic pointer file — the
-    stand-in for table-format (Delta/Iceberg) transactional commits."""
+    """A table replaced wholesale once per micro-batch through the commit
+    log; the current and previous versions stay on disk."""
 
     spark: SparkSession
     path: str
-    _version: int = field(default=0, init=False)
 
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
-
-    def _current_dir(self) -> str | None:
-        try:
-            with open(self._pointer) as f:
-                return os.path.join(self.path, f.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _write_version(self, df: DataFrame) -> None:
-        self._version += 1
-        name = f"v{self._version % 2}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, name))
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(name)
-        os.replace(tmp, self._pointer)  # atomic pointer swap
+    def _write_version(self, df: DataFrame, batch_id: int) -> None:
+        t = CommitLogTable(self.spark, self.path)
+        t.write_replace(df, txn=f"batch-{batch_id}")
+        t.vacuum(keep_last=2, min_age_seconds=0)
 
     def read(self) -> DataFrame | None:
-        cur = self._current_dir()
-        if cur is None:
+        t = CommitLogTable(self.spark, self.path)
+        if t.version() < 0:
             return None
-        return self.spark.read.parquet(cur)
+        return t.read()
 
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch``."""
@@ -73,7 +58,7 @@ class _VersionedTable:
         def apply(batch: DataFrame, batch_id: int) -> None:
             if batch.isEmpty():
                 return
-            self.merge_batch(batch)
+            self.merge_batch(batch, batch_id)
 
         return apply
 
@@ -122,19 +107,12 @@ class SnapshotMaintainer(_VersionedTable):
             return None
         return raw.filter(~F.col(self.action_col).isin(*self.delete_actions))
 
-    def _latest_per_key(self, batch: DataFrame) -> DataFrame:
-        order = [F.col(self.order_col).desc()]
-        order += [F.col(c).desc() for c in self.tiebreakers]
-        w = Window.partitionBy(*self.keys).orderBy(*order)
-        return (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+    def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
+        """Apply one micro-batch of change rows to the snapshot; a batch id
+        that already landed is a no-op."""
+        delta = _latest_version(
+            batch, self.keys, self.order_col, self.tiebreakers
         )
-
-    def merge_batch(self, batch: DataFrame) -> None:
-        """Apply one micro-batch of change rows to the snapshot."""
-        delta = self._latest_per_key(batch)
         prev = self.read()
         if prev is None:
             merged = delta
@@ -165,7 +143,7 @@ class SnapshotMaintainer(_VersionedTable):
                     for c in non_keys
                 ],
             )
-        self._write_version(merged)
+        self._write_version(merged, batch_id)
 
 
 @dataclass
@@ -199,11 +177,11 @@ class AggViewMaintainer(_VersionedTable):
             F.max(self.value_col).alias("hi"),
         )
 
-    def merge_batch(self, batch: DataFrame) -> None:
+    def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         delta = self._agg(batch)
         prev = self.read()
         if prev is None:
-            self._write_version(delta)
+            self._write_version(delta, batch_id)
             return
         z = F.lit(0).cast("bigint")
         b = prev.select(
@@ -221,7 +199,7 @@ class AggViewMaintainer(_VersionedTable):
             F.least("b_lo", "d_lo").alias("lo"),
             F.greatest("b_hi", "d_hi").alias("hi"),
         )
-        self._write_version(merged)
+        self._write_version(merged, batch_id)
 
     def current(self) -> DataFrame | None:
         """The serving view: (keys…, n_events, sum/avg/min/max_value)."""

@@ -215,8 +215,8 @@ def test_golden_evolution_file_matches_renderers():
 
 @pytest.mark.parametrize(
     "mode",
-    [{}, {"transactional": True}, {"commit_log": True}],
-    ids=["plain", "transactional", "commit_log"]
+    [{}, {"commit_log": True}],
+    ids=["plain", "commit_log"]
 )
 def test_schema_evolution_mid_stream_all_dialects(spark, tmp_path, mode):
     """Golden schema-evolution replay (VERDICT r8 #6): the steady-state
@@ -294,8 +294,8 @@ def test_schema_evolution_mid_stream_all_dialects(spark, tmp_path, mode):
 
 @pytest.mark.parametrize(
     "mode",
-    [{}, {"transactional": True}, {"commit_log": True}],
-    ids=["plain", "transactional", "commit_log"]
+    [{}, {"commit_log": True}],
+    ids=["plain", "commit_log"]
 )
 def test_schema_evolution_type_widening_mid_stream(spark, tmp_path, mode):
     """Golden type-widening replay (VERDICT r9 #6): the steady-state
@@ -372,8 +372,8 @@ def test_schema_evolution_type_widening_mid_stream(spark, tmp_path, mode):
 
 @pytest.mark.parametrize(
     "mode",
-    [{}, {"transactional": True}, {"commit_log": True}],
-    ids=["plain", "transactional", "commit_log"]
+    [{}, {"commit_log": True}],
+    ids=["plain", "commit_log"]
 )
 def test_schema_evolution_column_drop_and_tombstone(spark, tmp_path, mode):
     """Golden column-drop replay (VERDICT r9 #6): DROP COLUMN
@@ -464,8 +464,8 @@ def test_schema_evolution_column_drop_and_tombstone(spark, tmp_path, mode):
 
 @pytest.mark.parametrize(
     "mode",
-    [{}, {"transactional": True}, {"commit_log": True}],
-    ids=["plain", "transactional", "commit_log"]
+    [{}, {"commit_log": True}],
+    ids=["plain", "commit_log"]
 )
 def test_schema_evolution_column_rename_mid_stream(spark, tmp_path, mode):
     """Golden column-rename replay (VERDICT r10 #3): RENAME COLUMN

@@ -48,15 +48,11 @@ def _make_ingest(spark, tmp_path, in_dir, registry_doc, fmt, **mode):
     )
 
 
-MODES = [
-    {},
-    {"transactional": True},
-    {"commit_log": True},
-]
+MODES = [{}, {"commit_log": True}]
 
 
 @pytest.mark.parametrize(
-    "mode", MODES, ids=["plain", "transactional", "commit_log"]
+    "mode", MODES, ids=["plain", "commit_log"]
 )
 def test_wrong_envelope_then_replay_matches_clean_run(
     spark, tmp_path, mode
@@ -177,7 +173,7 @@ def test_replay_refuses_streaming_file_sink_layout(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "mode", MODES, ids=["plain", "transactional", "commit_log"]
+    "mode", MODES, ids=["plain", "commit_log"]
 )
 def test_identical_content_replayed_again_really_lands(
     spark, tmp_path, mode
@@ -255,7 +251,7 @@ def test_replay_completes_a_crashed_swap(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "mode", MODES, ids=["plain", "transactional", "commit_log"]
+    "mode", MODES, ids=["plain", "commit_log"]
 )
 def test_rows_quarantined_mid_replay_survive_the_swap(
     spark, tmp_path, mode

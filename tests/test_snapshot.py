@@ -39,8 +39,8 @@ def test_two_batch_merge_converges(spark, tmp_path):
     e = load_table(spark, SF_SMALL, "events")
     snap = _maintainer(spark, tmp_path)
     split = "2024-01-15 00:00:00"
-    snap.merge_batch(e.filter(F.col("ts") <= F.lit(split)))
-    snap.merge_batch(e.filter(F.col("ts") > F.lit(split)))
+    snap.merge_batch(e.filter(F.col("ts") <= F.lit(split)), 0)
+    snap.merge_batch(e.filter(F.col("ts") > F.lit(split)), 1)
     got = {r.user_id: (r.event_id, r.event_type) for r in snap.current().collect()}
     assert got == _expected(spark)
 
@@ -48,7 +48,7 @@ def test_two_batch_merge_converges(spark, tmp_path):
 def test_many_batches_same_result(spark, tmp_path):
     e = load_table(spark, SF_SMALL, "events")
     snap = _maintainer(spark, tmp_path)
-    for day in range(1, 32, 7):  # weekly chunks of January 2024
+    for batch_id, day in enumerate(range(1, 32, 7)):  # weekly chunks
         lo = f"2024-01-{day:02d} 00:00:00"
         hi = (
             f"2024-01-{day + 7:02d} 00:00:00" if day + 7 <= 31
@@ -56,7 +56,7 @@ def test_many_batches_same_result(spark, tmp_path):
         )
         chunk = e.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") < F.lit(hi)))
         if chunk.count():
-            snap.merge_batch(chunk)
+            snap.merge_batch(chunk, batch_id)
     got = {r.user_id: (r.event_id, r.event_type) for r in snap.current().collect()}
     assert got == _expected(spark)
 
@@ -64,10 +64,10 @@ def test_many_batches_same_result(spark, tmp_path):
 def test_late_replay_does_not_regress(spark, tmp_path):
     e = load_table(spark, SF_SMALL, "events")
     snap = _maintainer(spark, tmp_path)
-    snap.merge_batch(e)  # full log
+    snap.merge_batch(e, 0)  # full log
     before = {r.user_id: r.event_id for r in snap.current().collect()}
-    # replay an old prefix — nothing may change
-    snap.merge_batch(e.filter(F.col("ts") <= F.lit("2024-01-10 00:00:00")))
+    # a later batch carrying an old prefix — nothing may change
+    snap.merge_batch(e.filter(F.col("ts") <= F.lit("2024-01-10 00:00:00")), 1)
     after = {r.user_id: r.event_id for r in snap.current().collect()}
     assert after == before
 
@@ -102,9 +102,9 @@ def test_agg_view_maintainer_converges_and_streams(spark, tmp_path):
         "2024-01-21 00:00:00",
         "2024-02-01 00:00:00",
     ]
-    for lo_ts, hi_ts in zip(bounds, bounds[1:]):
+    for batch_id, (lo_ts, hi_ts) in enumerate(zip(bounds, bounds[1:])):
         chunk = e.filter((F.col("ts") >= F.lit(lo_ts)) & (F.col("ts") < F.lit(hi_ts)))
-        mv.merge_batch(chunk)
+        mv.merge_batch(chunk, batch_id)
     got = {
         (r.user_id, r.event_type): (r.n_events, r.sum_value, r.min_value, r.max_value)
         for r in mv.current().collect()
@@ -166,3 +166,28 @@ def test_maintainers_reject_empty_keys(spark, tmp_path):
         SnapshotMaintainer(spark=spark, path=str(tmp_path / "a"))
     with pytest.raises(ValueError, match="non-empty"):
         AggViewMaintainer(spark=spark, path=str(tmp_path / "b"))
+
+
+def test_agg_view_replayed_batch_counts_once(spark, tmp_path):
+    """Spark re-delivers a micro-batch after a crash under the same batch
+    id; the view must count it once, not twice."""
+    from cdc_streamming___v2_spark.streaming.snapshot import AggViewMaintainer
+
+    e = load_table(spark, SF_SMALL, "events").select("user_id", "value")
+    mv = AggViewMaintainer(
+        spark=spark, path=str(tmp_path / "mv"), keys=("user_id",)
+    )
+    apply = mv.foreach_batch()
+    apply(e, 0)
+    apply(e, 0)  # the re-delivery
+    got = {r.user_id: (r.n_events, r.sum_value) for r in mv.current().collect()}
+    want = {
+        r.user_id: (r.n, round(r.s, 2))
+        for r in e.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
+        .collect()
+    }
+    assert set(got) == set(want)
+    for k, (n, s) in want.items():
+        assert got[k][0] == n
+        assert abs(got[k][1] - s) < 0.02
