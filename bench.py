@@ -349,18 +349,13 @@ def _canary_verdict(pre: dict, post: dict) -> str:
 
 
 def _bench_cdc_ingest(
-    spark, sf_dir: str, source_format: str = "file",
-    envelope_format: str = "datastream",
+    spark, sf_dir: str, envelope_format: str = "datastream",
 ) -> tuple[float, int]:
     """End-to-end CDC ingest throughput: envelope NDJSON (synthesized from
     orders, written untimed) -> streaming parse/route/append via CdcIngest
     with availableNow. Returns (wall seconds, rows ingested). The reference
     pays >= 1 GCS schema download + 1 single-row BigQuery load job PER
-    RECORD here (SURVEY.md §4) — this is the headline CDC comparison.
-
-    ``source_format="kafka-mock"`` measures the Kafka-format twin: the same
-    files presented as Kafka-shaped binary record values, through the
-    identical bytes->string decode hop (no broker in this container)."""
+    RECORD here (SURVEY.md §4) — this is the headline CDC comparison."""
     import shutil
     import tempfile
 
@@ -452,7 +447,6 @@ def _bench_cdc_ingest(
             output_dir=os.path.join(work, "out"),
             checkpoint_dir=os.path.join(work, "ckpt"),
             partition_granularity="month",
-            source_format=source_format,
             envelope_format=envelope_format,
         )
         t0 = time.time()
@@ -471,24 +465,6 @@ def _bench_cdc_ingest_debezium(spark, sf_dir: str) -> dict:
     wall, rows = min(
         (
             _bench_cdc_ingest(spark, sf_dir, envelope_format="debezium")
-            for _ in range(2)
-        ),
-        key=lambda t: t[0],
-    )
-    return {
-        "rows": rows,
-        "wall_s": round(wall, 3),
-        "rows_per_s": round(rows / wall),
-    }
-
-
-def _bench_cdc_ingest_kafka_format(spark, sf_dir: str) -> dict:
-    """Kafka-format ingest twin (VERDICT r2 #8): same envelopes, presented
-    as Kafka record values (binary) through the identical decode+parse+route
-    plan, via the broker-less kafka-mock source."""
-    wall, rows = min(
-        (
-            _bench_cdc_ingest(spark, sf_dir, source_format="kafka-mock")
             for _ in range(2)
         ),
         key=lambda t: t[0],
@@ -590,7 +566,6 @@ def main() -> None:
 
     cdc_runs = [_bench_cdc_ingest(spark, sf_dir) for _ in range(3)]
     cdc_wall, cdc_rows = min(cdc_runs, key=lambda t: t[0])
-    cdc_kafka = _bench_cdc_ingest_kafka_format(spark, sf_dir)
     cdc_debezium = _bench_cdc_ingest_debezium(spark, sf_dir)
 
     # ...and AFTER everything timed — INCLUDING the cdc ingest runs, so
@@ -655,7 +630,6 @@ def main() -> None:
         "sf": sf,
         "n_queries": len(per_query),
         "cdc_ingest": cdc_ingest,
-        "cdc_ingest_kafka_format": cdc_kafka,
         "cdc_ingest_debezium": cdc_debezium,
         "canary_verdict": {
             "verdict": overall_canary,

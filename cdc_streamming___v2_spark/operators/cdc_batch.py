@@ -1761,7 +1761,6 @@ def schema_evolution_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(work, "ck"),
             envelope_format="auto",
             registry_path=reg_path,
-            hot_reload=True,
         )
         q = ing.start_single_pass()
         try:
@@ -1882,7 +1881,6 @@ def schema_evolution_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(work, "ck"),
             envelope_format="auto",
             registry_path=reg_path,
-            hot_reload=True,
         )
         q = ing.start_single_pass()
         try:
@@ -2007,7 +2005,6 @@ def schema_evolution_column_drop(
             checkpoint_dir=os.path.join(work, "ck"),
             envelope_format="auto",
             registry_path=reg_path,
-            hot_reload=True,
             allow_column_drops=True,
         )
         q = ing.start_single_pass()
@@ -2159,7 +2156,6 @@ def schema_evolution_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(work, "ck"),
             envelope_format="auto",
             registry_path=reg_path,
-            hot_reload=True,
         )
         q = ing.start_single_pass()
         try:
@@ -2673,7 +2669,6 @@ def registry_hot_add_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(work, "ck"),
             envelope_format="datastream",
             registry_path=reg_path,
-            hot_reload=True,
         )
         q = ing.start_single_pass()
         try:

@@ -467,7 +467,8 @@ class CommitLogTable:
     ) -> list[tuple[str, dict]]:
         """Live (path, column-stats) pairs at ``version`` (default: latest).
         Starts from the newest checkpoint at/below the target and replays
-        only the commits after it."""
+        only the commits after it; a version whose commits after that
+        checkpoint were vacuumed is unreachable and raises."""
         cp = self._latest_checkpoint(version)
         if cp is not None:
             base_v, body = cp
@@ -475,12 +476,15 @@ class CommitLogTable:
         else:
             base_v = -1
             entries = []
-            cvs = self._commit_versions()
-            if cvs and cvs[0] != 0:
-                raise ValueError(
-                    f"commit log vacuumed before version {cvs[0]} and no "
-                    f"checkpoint at/below version {version} — unreachable"
-                )
+        top = self.version()
+        if version is not None:
+            top = min(version, top)
+        tail = [v for v in self._commit_versions() if base_v < v <= top]
+        if tail != list(range(base_v + 1, top + 1)):
+            raise ValueError(
+                f"commit log vacuumed between checkpoint {base_v} and "
+                f"version {top} — unreachable"
+            )
         for c in self.commits(after=base_v):
             if version is not None and c.version > version:
                 break

@@ -11,21 +11,22 @@ Spark-first replacement (SURVEY.md §2.A ops 1-12):
     Pub/Sub notification hop — the file source's listing loop IS "notice new
     object, read it"; GZIP NDJSON decodes transparently) ->
     parse envelope JVM-side (get_json_object; payload kept as raw JSON) ->
-    one append writeStream per registered table: filter on object, one
-    from_json per row with that table's registry schema (fields projected
-    from the decoded struct), enrich action/update_date ->
+    one foreachBatch query: each micro-batch is parsed and cached once, then
+    every registered table filters on object, decodes the payload with one
+    from_json per row against its registry schema (fields projected from
+    the decoded struct) and enriches action/update_date ->
     parquet history table (append-only = the reference's WRITE_APPEND) ->
-    plus one dead-letter stream for unmapped/corrupt lines (strictly better
+    plus one dead-letter sink for unmapped/corrupt lines (strictly better
     than the reference's print/raise, py:96-100).
 
-Delivery: the per-table checkpointed file sinks are exactly-once per sink;
-single-pass commit-log sinks (streaming/commitlog.py) are exactly-once per
-(table, micro-batch) through ``batch-<id>`` txn ids; single-pass plain
-sinks may duplicate a prefix of the sink list after a crash. Both
-exactly-once modes upgrade the reference's at-least-once (SURVEY.md §4).
+Delivery: two sink modes. Commit-log sinks (streaming/commitlog.py) are
+exactly-once per (table, micro-batch) through ``batch-<id>`` txn ids,
+an upgrade on the reference's at-least-once (SURVEY.md §4); plain sinks
+may duplicate a prefix of the sink list after a crash.
 
-Scale: the pipeline is narrow — it scales linearly with executors. Plain
-and per-table-stream history tables are written hive-style partitioned by
+Scale: the pipeline is narrow — it scales linearly with executors, and a
+micro-batch scans and parses the log once however many tables the
+registry holds. Plain history tables are written hive-style partitioned by
 ``update_day`` (one co-location shuffle per table, so a day lands in one
 file per trigger) and point-in-time reads prune partitions before the
 SCD2 window shuffle (operators/history.py); commit-log tables carry the
@@ -155,7 +156,8 @@ class CdcIngest:
     is decoded bytes->string exactly like the reference's Pub/Sub decode
     hop (src/dataflow-cdc-stream.py:139), and everything downstream —
     parse, route, enrich, sinks — is the identical plan. Requires the
-    spark-sql-kafka connector on the classpath at ``start()`` time.
+    spark-sql-kafka connector on the classpath at ``start_single_pass()``
+    time.
     """
 
     spark: SparkSession
@@ -172,12 +174,12 @@ class CdcIngest:
     # sinks, dead-letter — is envelope-agnostic (sources/cdc_schema.py).
     envelope_format: str = "datastream"
     kafka_options: dict[str, str] = field(default_factory=dict)
-    # single-pass mode only: exactly-once via the manifest commit log
-    # (streaming/commitlog.py); readers resolve files through the log,
-    # uncommitted data is invisible, replays are txn-id no-ops.
+    # exactly-once via the manifest commit log (streaming/commitlog.py);
+    # readers resolve files through the log, uncommitted data is
+    # invisible, replays are txn-id no-ops.
     commit_log: bool = False
-    # single-pass mode only: re-stat ``registry_path`` once per micro-batch
-    # and hot-swap the registry when the file changes, after validating the
+    # when set: re-stat this registry file once per micro-batch and
+    # hot-swap the registry when it changes, after validating the
     # evolution is safe (SchemaRegistry.check_evolution). This reproduces
     # the reference's observable behavior — registry edits take effect
     # mid-stream (it re-downloads data-stream.json per RECORD,
@@ -186,7 +188,6 @@ class CdcIngest:
     # the next micro-batch; rows for them that arrived earlier are already
     # in the dead-letter sink (append-only semantics, nothing re-routes).
     registry_path: str | None = None
-    hot_reload: bool = False
     # opt-in: admit registry evolutions that DROP a column (old history
     # files keep the data physically; reads project it away). The drop is
     # tombstoned in ``output_dir/_schema_tombstones.json`` so a later
@@ -195,25 +196,23 @@ class CdcIngest:
     # drop must fail the stream loudly.
     allow_column_drops: bool = False
     max_files_per_trigger: int | None = None
-    partition_by_day: bool = True
-    # "day" | "month": pick so a partition holds file-sized row counts.
-    # Day is right when a day's changes fill >= one good parquet file
-    # (any real CDC volume); month keeps backfills of long/sparse history
-    # from exploding into thousands of tiny files (a 6-year backfill at
-    # bench scale = ~2400 day dirs of ~60 rows — measured 14x slower than
-    # month partitioning for identical data).
-    partition_granularity: str = "day"
+    # "day" | "month" | None (unpartitioned): pick so a partition holds
+    # file-sized row counts. Day is right when a day's changes fill >= one
+    # good parquet file (any real CDC volume); month keeps backfills of
+    # long/sparse history from exploding into thousands of tiny files (a
+    # 6-year backfill at bench scale = ~2400 day dirs of ~60 rows —
+    # measured 14x slower than month partitioning for identical data).
+    partition_granularity: str | None = "day"
     _queries: list[StreamingQuery] = field(default_factory=list)
     _registry_mtime: int | None = field(default=None, repr=False)
 
     @property
-    def _partition_col(self) -> str:
+    def _partition_col(self) -> str | None:
+        if self.partition_granularity is None:
+            return None
         return "update_day" if self.partition_granularity == "day" else "update_month"
 
     # -- plan construction (shared by batch and streaming) -------------------
-
-    def _read_stream(self) -> DataFrame:
-        return self._parse_lines(self._raw_lines(), self.envelope_format)
 
     @staticmethod
     def _parse_lines(raw: DataFrame, envelope_format: str) -> DataFrame:
@@ -244,24 +243,6 @@ class CdcIngest:
                 )
             # bytes -> UTF-8 string: the reference's decode hop (py:139)
             return reader.load().select(F.col("value").cast("string").alias("value"))
-        if self.source_format == "kafka-mock":
-            # Broker-less stand-in for the Kafka path: stream the same NDJSON
-            # files but present each record as a Kafka-shaped binary ``value``
-            # and run the identical bytes -> UTF-8 decode hop. Exists so the
-            # Kafka-format plan has a measurable throughput twin (bench.py)
-            # in environments without a broker/connector; everything from the
-            # decode on is byte-for-byte the kafka branch above.
-            reader = self.spark.readStream.format("text")
-            if self.max_files_per_trigger:
-                reader = reader.option(
-                    "maxFilesPerTrigger", self.max_files_per_trigger
-                )
-            kafka_shaped = reader.load(self.input_dir).select(
-                F.encode(F.col("value"), "UTF-8").alias("value")
-            )
-            return kafka_shaped.select(
-                F.col("value").cast("string").alias("value")
-            )
         if self.source_format != "file":
             raise ValueError(f"unknown source_format: {self.source_format!r}")
         reader = self.spark.readStream.format("text")
@@ -327,7 +308,7 @@ class CdcIngest:
             else:
                 cols.append(update_date_expr(sink_field.dataType).alias(name))
         out = parsed.select(*cols)
-        if self.partition_by_day:
+        if self._partition_col:
             out = out.withColumn(
                 self._partition_col,
                 _partition_bucket(
@@ -368,55 +349,29 @@ class CdcIngest:
 
     # -- streaming execution -------------------------------------------------
 
-    def start(self, available_now: bool = False) -> list[StreamingQuery]:
-        """Start one append writeStream per registered table + dead-letter."""
-        env = self._read_stream()
-        for spec in self.registry:
-            sink = os.path.join(self.output_dir, spec.table_name)
-            ckpt = os.path.join(self.checkpoint_dir, spec.table_name)
-            writer = (
-                self._route_table(env, spec)
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-            )
-            if self.partition_by_day:
-                writer = writer.partitionBy(self._partition_col)
-            if available_now:
-                writer = writer.trigger(availableNow=True)
-            self._queries.append(writer.start())
-
-        dl_writer = (
-            self._dead_letters(env)
-            .writeStream.format("parquet")
-            .option("path", os.path.join(self.output_dir, "_dead_letter"))
-            .option("checkpointLocation", os.path.join(self.checkpoint_dir, "_dead_letter"))
-            .outputMode("append")
-        )
-        if available_now:
-            dl_writer = dl_writer.trigger(availableNow=True)
-        self._queries.append(dl_writer.start())
-        return self._queries
-
-    def run_available(self) -> None:
-        """Process everything currently in input_dir, then stop (for tests
-        and batch-style backfills; the reference's backfill_all analogue)."""
-        for q in self.start(available_now=True):
-            q.awaitTermination()
-        self._queries.clear()
-
-    # -- single-pass mode ----------------------------------------------------
+    def _refuse_streaming_file_sinks(self) -> None:
+        """Raise if a sink directory holds a ``_spark_metadata`` log (a
+        Structured Streaming file-sink table). Spark reads such a
+        directory through that log alone, so files a plain append adds
+        never show up in reads, and a commit-log table over it would hide
+        the old rows instead — refuse loudly rather than lose data
+        silently."""
+        for name in [s.table_name for s in self.registry] + ["_dead_letter"]:
+            d = os.path.join(self.output_dir, name)
+            if os.path.exists(os.path.join(d, "_spark_metadata")):
+                raise ValueError(
+                    f"{d} is a streaming file-sink table (_spark_metadata "
+                    "log), which this ingest cannot append to or replay "
+                    "into; rewrite it to a fresh directory first"
+                )
 
     def start_single_pass(self, available_now: bool = False) -> StreamingQuery:
         """One readStream + foreachBatch writing every table per micro-batch.
 
-        The per-table writeStream mode (``start``) runs N+1 independent
-        streams, so each micro-batch scans and JSON-parses the log N+1
-        times. Here the envelope batch is parsed once, persisted, and each
-        registered table + the dead-letter sink filters from it — one scan
-        regardless of registry size. This is the right shape when the
-        registry is wide (many source tables per log stream).
+        The envelope batch is parsed once, persisted, and each registered
+        table + the dead-letter sink filters from it — one scan of the log
+        per micro-batch regardless of registry size. With
+        ``available_now`` the query drains the current input, then stops.
 
         Delivery: a batch-id marker commits each micro-batch after all
         sinks are written, so replays after a crash skip completed batches.
@@ -428,7 +383,8 @@ class CdcIngest:
         exactly once no matter where a crash falls, and readers never see
         uncommitted files.
         """
-        env = self._read_stream()
+        self._refuse_streaming_file_sinks()
+        env = self._parse_lines(self._raw_lines(), self.envelope_format)
 
         def _publish_one(routed: DataFrame, spec: TableSpec | None,
                          batch_id: int) -> None:
@@ -446,7 +402,7 @@ class CdcIngest:
                 return
             parts = (
                 [self._partition_col]
-                if self.partition_by_day and spec is not None
+                if self._partition_col and spec is not None
                 else []
             )
             routed.write.mode("append").partitionBy(*parts).parquet(sink)
@@ -536,7 +492,8 @@ class CdcIngest:
         return q
 
     def run_available_single_pass(self) -> None:
-        """Single-pass equivalent of run_available."""
+        """Process everything currently in input_dir, then stop (for tests
+        and batch-style backfills; the reference's backfill_all analogue)."""
         q = self.start_single_pass(available_now=True)
         q.awaitTermination()
         self._queries.clear()
@@ -628,26 +585,8 @@ class CdcIngest:
                 )
             else:
                 return {"replayed": 0, "requarantined": 0, "tables": {}}
-        # Per-table writeStream sinks (start()/run_available) own their
-        # directories through a _spark_metadata transaction log: files
-        # appended outside that protocol are INVISIBLE to readers, and
-        # swapping the quarantine directory would orphan the log — a
-        # silent-data-loss shape, so refuse loudly instead.  Replay is
-        # supported for the single-pass sink layouts (plain /
-        # commit-log), which every documented production configuration
-        # uses.
-        sink_dirs = [dl_dir] + [
-            os.path.join(self.output_dir, s.table_name)
-            for s in self.registry
-        ]
-        for d in sink_dirs:
-            if os.path.exists(os.path.join(d, "_spark_metadata")):
-                raise ValueError(
-                    f"{d} is a streaming file-sink table (_spark_metadata "
-                    "log) — dead-letter replay supports single-pass sinks "
-                    "only; re-ingest with mode single-pass, or drain the "
-                    "per-table streams and migrate the sinks first"
-                )
+        # swapping a _spark_metadata quarantine would also orphan its log
+        self._refuse_streaming_file_sinks()
         self._maybe_reload_registry()
 
         # snapshot pinned at FILE level: the swap in step 3 removes exactly
@@ -723,9 +662,7 @@ class CdcIngest:
                 continue
             tables[spec.table_name] = n
             sink = os.path.join(self.output_dir, spec.table_name)
-            part_cols = (
-                [self._partition_col] if self.partition_by_day else []
-            )
+            part_cols = [self._partition_col] if self._partition_col else []
             if self.commit_log:
                 CommitLogTable(self.spark, sink).write_append(
                     routed, txn=f"replay-{replay_id}"
@@ -997,7 +934,7 @@ class CdcIngest:
         """Hot-swap the registry when its backing file changed (driver-side,
         once per micro-batch). Unsafe evolutions raise — failing the stream
         beats silently corrupting history tables mid-flight."""
-        if not self.hot_reload or not self.registry_path:
+        if not self.registry_path:
             return
         mtime = os.stat(self.registry_path).st_mtime_ns
         if mtime == self._registry_mtime:
@@ -1098,12 +1035,11 @@ class CdcIngest:
         # reverse — exactly one leg is ever non-null because admission
         # retires the old name and forbids its re-add)
         chains, extra = self._continuity_fields(spec)
-        schema = T.StructType([
-            *_with_partition_col(
-                spec, self._partition_col if self.partition_by_day else None
-            ).fields,
-            *extra,
-        ])
+        part = (
+            [T.StructField(self._partition_col, T.DateType(), True)]
+            if self._partition_col else []
+        )
+        schema = T.StructType([*spec.schema.fields, *part, *extra])
         path = os.path.join(self.output_dir, spec.table_name)
         if self.commit_log:
             df = CommitLogTable(self.spark, path).read(schema)
@@ -1202,15 +1138,11 @@ def main(argv: list[str] | None = None) -> int:
                    help="root directory for history tables + dead letter")
     p.add_argument("--checkpoint-dir", default=None,
                    help="stream checkpoint root (default: OUTPUT/_checkpoints)")
-    p.add_argument("--mode", choices=["single-pass", "per-table"],
-                   default="single-pass",
-                   help="single-pass: one scan feeds all tables per batch; "
-                   "per-table: one independent writeStream per table")
     p.add_argument("--trigger", choices=["stream", "available-now"],
                    default="stream",
                    help="stream: run until interrupted; available-now: "
                    "drain current input, then exit (backfill_all analogue)")
-    p.add_argument("--source-format", choices=["file", "kafka", "kafka-mock"],
+    p.add_argument("--source-format", choices=["file", "kafka"],
                    default="file")
     p.add_argument("--envelope-format",
                    choices=_ENVELOPE_FORMATS,
@@ -1230,9 +1162,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-partition", action="store_true",
                    help="write history tables unpartitioned")
     p.add_argument("--commit-log", action="store_true",
-                   help="single-pass: manifest commit-log sinks")
+                   help="manifest commit-log sinks (exactly-once)")
     p.add_argument("--hot-reload", action="store_true",
-                   help="single-pass: pick up registry file edits (new "
+                   help="pick up registry file edits (new "
                    "tables / added columns / safe type widenings) "
                    "mid-stream")
     p.add_argument("--allow-column-drops", action="store_true",
@@ -1267,8 +1199,6 @@ def main(argv: list[str] | None = None) -> int:
         if not sep:
             p.error(f"--kafka-option needs KEY=VALUE, got {kv!r}")
         kafka_options[k] = v
-    if args.mode == "per-table" and (args.commit_log or args.hot_reload):
-        p.error("--commit-log/--hot-reload need --mode single-pass")
     if args.maintain and not args.commit_log:
         p.error("--maintain needs --commit-log")
 
@@ -1285,10 +1215,10 @@ def main(argv: list[str] | None = None) -> int:
         kafka_options=kafka_options,
         commit_log=args.commit_log,
         max_files_per_trigger=args.max_files_per_trigger,
-        partition_by_day=not args.no_partition,
-        partition_granularity=args.partition_granularity,
-        registry_path=args.registry,
-        hot_reload=args.hot_reload,
+        partition_granularity=(
+            None if args.no_partition else args.partition_granularity
+        ),
+        registry_path=args.registry if args.hot_reload else None,
         allow_column_drops=args.allow_column_drops,
     )
     if args.replay_dead_letters:
@@ -1303,17 +1233,9 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(report), flush=True)
         return 0
     if args.trigger == "available-now":
-        if args.mode == "single-pass":
-            ingest.run_available_single_pass()
-        else:
-            ingest.run_available()
-        return 0
-    if args.mode == "single-pass":
-        q = ingest.start_single_pass()
-        q.awaitTermination()
+        ingest.run_available_single_pass()
     else:
-        for q in ingest.start():
-            q.awaitTermination()
+        ingest.start_single_pass().awaitTermination()
     return 0
 
 
@@ -1331,13 +1253,6 @@ def _partition_bucket(update_date, dtype, granularity: str):
     if granularity == "day":
         return F.to_date(ts)
     return F.to_date(F.date_trunc("month", ts))
-
-
-def _with_partition_col(spec: TableSpec, partition_col: str | None):
-    fields = list(spec.schema.fields)
-    if partition_col is not None:
-        fields.append(T.StructField(partition_col, T.DateType(), True))
-    return T.StructType(fields)
 
 
 if __name__ == "__main__":

@@ -250,7 +250,6 @@ def test_schema_evolution_mid_stream_all_dialects(spark, tmp_path, mode):
         checkpoint_dir=str(tmp_path / "ck"),
         envelope_format="auto",
         registry_path=reg_path,
-        hot_reload=True,
         **mode,
     )
     n = len(DIALECTS)
@@ -329,7 +328,6 @@ def test_schema_evolution_type_widening_mid_stream(spark, tmp_path, mode):
         checkpoint_dir=str(tmp_path / "ck"),
         envelope_format="auto",
         registry_path=reg_path,
-        hot_reload=True,
         **mode,
     )
     n = len(DIALECTS)
@@ -406,7 +404,6 @@ def test_schema_evolution_column_drop_and_tombstone(spark, tmp_path, mode):
         checkpoint_dir=str(tmp_path / "ck"),
         envelope_format="auto",
         registry_path=reg_path,
-        hot_reload=True,
         allow_column_drops=True,
         **mode,
     )
@@ -502,7 +499,6 @@ def test_schema_evolution_column_rename_mid_stream(spark, tmp_path, mode):
         checkpoint_dir=str(tmp_path / "ck"),
         envelope_format="auto",
         registry_path=reg_path,
-        hot_reload=True,
         **mode,
     )
     n = len(DIALECTS)

@@ -97,7 +97,7 @@ def ingested(spark, tmp_path_factory):
         output_dir=out_dir,
         checkpoint_dir=ck_dir,
     )
-    ing.run_available()
+    ing.run_available_single_pass()
     return ing
 
 
@@ -156,7 +156,7 @@ def test_dead_letter_captures_unmapped_and_corrupt(ingested):
 def test_incremental_second_run_exactly_once(spark, ingested):
     # re-running with no new files must not duplicate history rows
     before = ingested.history("olist_produtos").count()
-    ingested.run_available()
+    ingested.run_available_single_pass()
     assert ingested.history("olist_produtos").count() == before
 
 
@@ -182,7 +182,9 @@ def ingested_single_pass(spark, tmp_path_factory):
     return ing
 
 
-def test_single_pass_matches_per_table_mode(ingested, ingested_single_pass):
+def test_day_partitions_match_month_partitions(ingested, ingested_single_pass):
+    """Partition granularity changes only the layout: day- and
+    month-partitioned ingests of the same corpus hold the same rows."""
     for obj in ("olist_produtos", "olist_users"):
         a = ingested.history(obj).drop("update_day").collect()
         b = ingested_single_pass.history(obj).drop("update_month").collect()
@@ -246,32 +248,6 @@ def test_as_of_prunes_history_partitions(ingested):
     assert ids == {"p1", "p2"}
 
 
-def test_kafka_mock_e2e_matches_file_source(spark, ingested, tmp_path):
-    """kafka-mock streams the same files but presents each record as a
-    Kafka-shaped binary value through the real decode hop; e2e history
-    must equal the file-source ingest exactly."""
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    with open(os.path.join(in_dir, "batch1.jsonl"), "w") as f:
-        f.write("\n".join(LINES[:4]) + "\n")
-    with gzip.open(os.path.join(in_dir, "batch2.jsonl.gz"), "wt") as f:
-        f.write("\n".join(LINES[4:]) + "\n")
-    ing = CdcIngest(
-        spark=spark,
-        registry=SchemaRegistry.from_dict(REGISTRY_DOC),
-        input_dir=in_dir,
-        output_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ck"),
-        source_format="kafka-mock",
-    )
-    ing.run_available()
-    for obj in ("olist_produtos", "olist_users"):
-        key = lambda r: tuple(str(v) for v in r)
-        got = sorted(map(key, ing.history(obj).collect()))
-        want = sorted(map(key, ingested.history(obj).collect()))
-        assert got == want
-
-
 def test_kafka_reader_gated_on_connector(spark, tmp_path):
     """With source_format='kafka' the reader builds the standard Kafka source;
     in this container the connector jar is absent, so materializing the plan
@@ -290,7 +266,7 @@ def test_kafka_reader_gated_on_connector(spark, tmp_path):
         },
     )
     try:
-        ing._read_stream()
+        ing._raw_lines()
     except Exception as e:  # missing connector is the expected outcome here
         assert "kafka" in str(e).lower()
 
@@ -305,7 +281,7 @@ def test_unknown_source_format_rejected(spark, tmp_path):
         source_format="carrier-pigeon",
     )
     with pytest.raises(ValueError, match="source_format"):
-        ing._read_stream()
+        ing._raw_lines()
 
 
 # --- exactly-once single-pass publish through the commit log -----------------
@@ -332,7 +308,9 @@ def ingested_txn(spark, tmp_path_factory):
     return ing
 
 
-def test_txn_matches_per_table_mode(ingested, ingested_txn):
+def test_commit_log_sinks_match_plain_sinks(ingested, ingested_txn):
+    """The sink mode changes only how a batch is published: commit-log
+    and plain sinks of the same corpus hold the same rows."""
     for obj in ("olist_produtos", "olist_users"):
         a = ingested.history(obj).drop("update_day").collect()
         b = ingested_txn.history(obj).drop("update_day").collect()
@@ -385,6 +363,58 @@ def test_txn_replay_after_lost_marker_is_exactly_once(spark, ingested_txn):
     assert ing.dead_letter().count() == 2
 
 
+def streaming_file_sink(spark, src_dir, sink, ckpt):
+    """Lay down ``sink`` as a bare Structured Streaming parquet sink does:
+    the lines under ``src_dir`` as dead-letter-shaped rows, plus the
+    sink's ``_spark_metadata`` log."""
+    from pyspark.sql import functions as F
+
+    q = (
+        spark.readStream.format("text").load(src_dir)
+        .select(
+            F.lit(None).cast("string").alias("object"),
+            F.col("value").alias("raw"),
+            F.current_timestamp().alias("dead_letter_at"),
+        )
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert os.path.isdir(os.path.join(sink, "_spark_metadata"))
+
+
+def test_start_refuses_streaming_file_sink_layout(spark, tmp_path):
+    """Spark reads a directory holding ``_spark_metadata`` through that
+    log alone: plain appends to it would never show up in reads, and a
+    commit-log table over it would hide the old rows. Either sink mode
+    must refuse such a table before the stream starts."""
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    with open(os.path.join(in_dir, "b1.jsonl"), "w") as f:
+        f.write("\n".join(LINES) + "\n")
+    out_dir = str(tmp_path / "out")
+    streaming_file_sink(
+        spark, in_dir, os.path.join(out_dir, "produtos_cdc"),
+        str(tmp_path / "old_ck"),
+    )
+    for commit_log in (False, True):
+        ing = CdcIngest(
+            spark=spark,
+            registry=SchemaRegistry.from_dict(REGISTRY_DOC),
+            input_dir=in_dir,
+            output_dir=out_dir,
+            checkpoint_dir=str(tmp_path / f"ck_{commit_log}"),
+            commit_log=commit_log,
+        )
+        with pytest.raises(ValueError, match="_spark_metadata"):
+            ing.start_single_pass()
+        assert not ing._queries
+    assert not os.path.exists(os.path.join(out_dir, "users_cdc"))
+
+
 # --- registry schema evolution ------------------------------------------------
 
 
@@ -409,7 +439,7 @@ def test_registry_evolution_add_column_end_to_end(spark, tmp_path):
     with open(os.path.join(in_dir, "v1.jsonl"), "w") as f:
         f.write("\n".join(LINES[:4]) + "\n")
     v1 = SchemaRegistry.from_dict(REGISTRY_DOC)
-    CdcIngest(spark, v1, in_dir, out_dir, ck_dir).run_available()
+    CdcIngest(spark, v1, in_dir, out_dir, ck_dir).run_available_single_pass()
 
     v2 = SchemaRegistry.from_dict(_evolved_registry())
     v1.check_evolution(v2)  # safe: add-column only
@@ -419,7 +449,7 @@ def test_registry_evolution_add_column_end_to_end(spark, tmp_path):
                       "product_photos_qty": 1, "product_height_cm": 42.5,
                       "product_weight_g": 500.0}) + "\n")
     ing2 = CdcIngest(spark, v2, in_dir, out_dir, ck_dir)
-    ing2.run_available()
+    ing2.run_available_single_pass()
 
     hist = ing2.history("olist_produtos")
     assert hist.count() == 5
@@ -486,7 +516,6 @@ def test_registry_hot_reload_new_table_mid_stream(spark, tmp_path):
         output_dir=out_dir,
         checkpoint_dir=ck_dir,
         registry_path=reg_path,
-        hot_reload=True,
     )
     q = ing.start_single_pass()
     try:
@@ -543,7 +572,6 @@ def test_hot_reload_rejects_unsafe_edit_mid_stream(spark, tmp_path):
         output_dir=out_dir,
         checkpoint_dir=ck_dir,
         registry_path=reg_path,
-        hot_reload=True,
     )
     q = ing.start_single_pass()
     try:
@@ -639,14 +667,14 @@ def test_cli_replay_dead_letters(tmp_path, capsys):
 
 def test_cli_rejects_bad_flag_combo(tmp_path):
     """Each combination fails in argument parsing, before a Spark session
-    starts: per-table mode with a single-pass flag, ``--maintain`` without
-    commit-log sinks, and the removed ``--transactional`` flag."""
+    starts: ``--maintain`` without commit-log sinks, and the removed
+    ``--mode`` and ``--transactional`` flags."""
     from cdc_streamming___v2_spark.streaming.ingest import main
 
     base = ["--input-dir", "x", "--registry", "y", "--output-dir", "z"]
     for extra in (
-        ["--mode", "per-table", "--hot-reload"],
         ["--maintain"],
+        ["--mode"],
         ["--transactional"],
     ):
         with pytest.raises(SystemExit) as exc:
@@ -2096,7 +2124,7 @@ def test_single_parse_keeps_fields_beside_a_bad_one(spark, tmp_path):
         input_dir=str(tmp_path / "in"),
         output_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ck"),
-        partition_by_day=False,
+        partition_granularity=None,
     )
     names = [f.name for f in spec.payload_schema]
     got = ing._route_table(env, spec).select(*names).collect()

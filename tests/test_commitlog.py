@@ -1,6 +1,6 @@
 """Manifest commit-log tests: invisibility of uncommitted data, txn
 idempotence across crash windows, compaction + time travel, and the
-CdcIngest commit-log mode matching the per-table sink output."""
+CdcIngest commit-log mode landing the expected history rows."""
 
 from __future__ import annotations
 
@@ -226,6 +226,22 @@ def test_checkpoint_folds_log_and_survives_vacuum(spark, tmp_path):
     assert t.read(version=6).count() == 70
     with pytest.raises(ValueError, match="unreachable"):
         t.read(version=1)
+
+
+def test_read_between_checkpoints_after_vacuum_is_refused(spark, tmp_path):
+    """A version between an older checkpoint and the newest one needs the
+    commits ``vacuum_log`` deleted: reading it must raise, not return the
+    older checkpoint's snapshot as if it were that version."""
+    t = CommitLogTable(spark, str(tmp_path / "t"), checkpoint_every=3)
+    for i in range(7):  # versions 0..6 -> checkpoints at v2 and v5
+        t.write_append(_frame(spark, i, i + 1), txn=f"b{i}")
+    assert t.read(version=4).count() == 5
+    t.vacuum_log()
+    for v in (3, 4):
+        with pytest.raises(ValueError, match="unreachable"):
+            t.read(version=v)
+    assert t.read(version=5).count() == 6
+    assert t.read().count() == 7
 
 
 def test_checkpoint_read_matches_raw_replay(spark, tmp_path):

@@ -25,7 +25,7 @@ from .test_cdc_conformance import (
     _canon_produtos,
     _canon_users,
 )
-from .test_cdc_ingest import REGISTRY_DOC
+from .test_cdc_ingest import REGISTRY_DOC, streaming_file_sink
 
 
 def _write_lines(tmp_path, lines):
@@ -157,17 +157,18 @@ def test_replay_on_empty_or_missing_quarantine_is_noop(spark, tmp_path):
 
 
 def test_replay_refuses_streaming_file_sink_layout(spark, tmp_path):
-    """Per-table writeStream sinks own their dirs via a _spark_metadata
-    log; files appended outside it are invisible to readers and a dir
-    swap would orphan the log. Replay must refuse loudly, not lose data
+    """A streaming file sink owns its dir via a _spark_metadata log;
+    files appended outside it are invisible to readers and a dir swap
+    would orphan the log. Replay must refuse loudly, not lose data
     silently."""
     lines = golden_cdc.render("datastream")
     in_dir = _write_lines(tmp_path, lines)
-    partial = {"olist_produtos": REGISTRY_DOC["olist_produtos"]}
-    ing = _make_ingest(spark, tmp_path, in_dir, partial, "datastream")
-    ing.run_available()  # per-table mode -> _spark_metadata sinks
-    assert ing.dead_letter().count() == 1
-    ing.registry = SchemaRegistry.from_dict(REGISTRY_DOC)
+    ing = _make_ingest(spark, tmp_path, in_dir, REGISTRY_DOC, "datastream")
+    streaming_file_sink(
+        spark, in_dir, os.path.join(ing.output_dir, "_dead_letter"),
+        str(tmp_path / "old_ck"),
+    )
+    assert ing.dead_letter().count() == len(lines)
     with pytest.raises(ValueError, match="_spark_metadata"):
         ing.replay_dead_letters()
 
