@@ -1,9 +1,12 @@
-"""Batch twins of the streaming window operators (oracle-checkable).
+"""Event-time window operators over the ``events`` table (oracle-checkable).
 
-Same window semantics as streaming/windows.py, computed over the batch
-``events`` table so DuckDB can verify values: tumbling via F.window ≡
-time_bucket, sliding via the 2-offset expansion, sessionization via the
-lag/gaps-and-islands construction (identical window-function SQL).
+The batch queries compute window semantics DuckDB can verify: tumbling
+via F.window ≡ time_bucket, sliding via the 2-offset expansion,
+sessionization via the lag/gaps-and-islands construction (identical
+window-function SQL). The ``streaming_*_execution`` queries replay the
+same table as real multi-micro-batch Structured Streaming runs
+(watermark, session merge, dedup, stream-stream interval join), so the
+rows the stateful operators emit are oracle-checked too.
 """
 
 from __future__ import annotations
@@ -741,11 +744,59 @@ ORACLES["streaming_dedup_execution"] = """
 """
 
 
+def interval_join_streams(
+    errors: DataFrame,
+    clicks: DataFrame,
+    window_minutes: int = 10,
+    watermark: str = "1 hour",
+    how: str = "inner",
+) -> DataFrame:
+    """Stream-stream interval join: each error event paired with the same
+    user's click events from the preceding ``window_minutes``.
+
+    Both sides carry watermarks and the join condition bounds event-time
+    distance, so the state store can evict rows once the watermark passes
+    — bounded state, the requirement for an unbounded 100 TB stream.
+    Batch twin (oracle-checked): operators/temporal.range_join_error_clicks.
+
+    ``how="leftOuter"`` keeps errors with NO click in the window: the
+    engine can only emit the null-padded row once the click-side watermark
+    passes the end of that error's interval (before that, a matching click
+    might still arrive), so outer results trail the inner ones by up to
+    the watermark delay — correctness over latency, resolved per event as
+    soon as the stream itself proves no match can appear.
+    """
+    e = (
+        errors.withWatermark("ts", watermark)
+        .select(
+            F.col("user_id").alias("e_user"),
+            F.col("event_id").alias("error_id"),
+            F.col("ts").alias("e_ts"),
+        )
+    )
+    c = (
+        clicks.withWatermark("ts", watermark)
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("c_ts"),
+        )
+    )
+    cond = (
+        (F.col("e_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("e_ts") - F.expr(f"INTERVAL {window_minutes} MINUTES"))
+        & (F.col("c_ts") < F.col("e_ts"))
+    )
+    return e.join(c, cond, how).select(
+        F.col("e_user").alias("user_id"), "error_id", "e_ts", "click_id", "c_ts"
+    )
+
+
 def streaming_interval_join_execution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """REAL streaming execution of the stream-stream INTERVAL JOIN
-    (streaming/windows.interval_join_streams) — the fourth stateful
+    (interval_join_streams above) — the fourth stateful
     class promoted from batch-twin-only to a genuine multi-micro-batch
     run (VERDICT r10 #4): errors and clicks are each split at the
     GLOBAL epoch-micros terciles into three mtime-ordered files and
@@ -825,8 +876,6 @@ def streaming_interval_join_execution(
                 dst = os.path.join(in_dir, f"{chr(97 + i)}.parquet")
                 os.rename(os.path.join(d, src), dst)
                 os.utime(dst, (1000 * (i + 1),) * 2)  # replay order
-
-        from ..streaming.windows import interval_join_streams
 
         schema = "event_id long, user_id long, ts timestamp"
         errs = (

@@ -103,7 +103,7 @@ def _byte_histogram_features(content: bytes) -> list[float]:
     n = len(head)
     # HALF-UP at 6dp (not Python round's half-to-even): matches both
     # engines' round() on the identical double c/n, so the share is
-    # oracle-reproducible (the moments_stream cents lesson)
+    # oracle-reproducible
     return [int((c / n) * 1e6 + 0.5) / 1e6 for c in bins]
 
 

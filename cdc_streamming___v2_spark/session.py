@@ -11,6 +11,14 @@ Key choices (scale rationale):
   is superseded by AQE's coalescing from a high initial value.
 - UTC session timezone: parity with the DuckDB oracle (UTC-naive timestamps).
 - Arrow enabled: vectorized Pandas-UDF exchange for the few Python-side ops.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+  every ``functions`` call and ``Column`` method walks the Python stack
+  and makes extra py4j round trips, which roughly doubles the time to
+  build a query's Column trees. The trade: an execution error no longer
+  names the Python line that built the failing expression; its error
+  class and message are unchanged. It is a static SQL conf, so only
+  ``get_spark`` sets it (``configure_existing`` cannot).
 """
 
 from __future__ import annotations
@@ -45,6 +53,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -8,10 +8,12 @@ reads them, src/dataflow-cdc-stream.py:64-69):
      "payload": {...full row image...}}
 
 Parsing strategy (Spark-first): read each NDJSON line as raw text and pull
-envelope fields with ``get_json_object`` — crucially ``$.payload`` comes out
-as the RAW JSON STRING, which lets ONE stream with ONE fixed schema carry
-rows destined for tables with DIFFERENT schemas. Each route then applies its
-own ``from_json(payload_json, table_schema)``. All JVM-side, no Python UDFs.
+the top-level envelope fields with one ``json_tuple`` (plus one
+``get_json_object`` for ``change_type`` inside ``source_metadata``) —
+crucially ``payload`` comes out as the RAW JSON STRING, which lets ONE
+stream with ONE fixed schema carry rows destined for tables with DIFFERENT
+schemas. Each route then applies its own ``from_json(payload_json,
+table_schema)``. All JVM-side, no Python UDFs.
 
 This solves the "per-table dynamic schemas in one stream" problem flagged in
 SURVEY.md §7 without custom Catalyst machinery.

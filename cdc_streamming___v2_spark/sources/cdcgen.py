@@ -35,7 +35,7 @@ from pyspark.sql.datasource import (
 GEN_TABLES = ("orders", "customer", "lineitem")
 # Canonical Datastream envelope vocabulary is UPPERCASE (cdc_schema.py);
 # parse_envelope passes change_type through verbatim, so the generator must
-# emit actions that match snapshot.py's delete_actions=("DELETE",) contract.
+# emit actions that match operators/history.DELETE_ACTIONS.
 GEN_ACTIONS = ("INSERT", "UPDATE-INSERT", "DELETE", "INSERT")
 GEN_EPOCH = datetime(2024, 1, 1)
 GEN_V_MOD = 97

@@ -1,5 +1,5 @@
 """Manifest-based commit log for parquet tables — the engine's one
-exactly-once publish path (ingest.py's commit-log sinks, snapshot.py's views).
+exactly-once publish path (ingest.py's commit-log sinks and dead-letter swap).
 
 The reference's sink is BigQuery ``WRITE_APPEND`` with no dedup key
 (src/dataflow-cdc-stream.py:86-92), which is at-least-once: a Dataflow retry
@@ -586,17 +586,6 @@ class CommitLogTable:
         return inserts.unionByName(deletes).withColumn(
             "_commit_version", F.lit(to_version).cast("long")
         )
-
-    def files_scanned(
-        self, where: list[tuple] | None = None, version: int | None = None
-    ) -> tuple[int, int]:
-        """(files after pruning, total live files) — observability hook the
-        tests and EXPLAIN-style tooling use to prove skipping happened."""
-        entries = self.snapshot_entries(version)
-        kept = [
-            e for e in entries if not where or _file_may_match(e[1], where)
-        ]
-        return len(kept), len(entries)
 
 
 def _safe(txn: str) -> str:

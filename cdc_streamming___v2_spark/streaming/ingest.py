@@ -10,7 +10,8 @@ Spark-first replacement (SURVEY.md §2.A ops 1-12):
     Structured Streaming FILE SOURCE on the log directory (subsumes the
     Pub/Sub notification hop — the file source's listing loop IS "notice new
     object, read it"; GZIP NDJSON decodes transparently) ->
-    parse envelope JVM-side (get_json_object; payload kept as raw JSON) ->
+    parse envelope JVM-side (one json_tuple for the top-level fields plus
+    one get_json_object for change_type; payload kept as raw JSON) ->
     one foreachBatch query: each micro-batch is parsed and cached once, then
     every registered table filters on object, decodes the payload with one
     from_json per row against its registry schema (fields projected from
@@ -166,12 +167,11 @@ class CdcIngest:
     output_dir: str
     checkpoint_dir: str
     source_format: str = "file"
-    # "datastream" (the reference's envelope), "debezium" (op c/u/d/r +
-    # before/after images + ts_ms + source.table), "maxwell" (type +
-    # data/old + ts + table), "canal" (type + batched data[] + es +
-    # table), or "auto" (per-line dispatch for mixed streams). Everything
-    # downstream of the parse — registry route, payload decode, enrich,
-    # sinks, dead-letter — is envelope-agnostic (sources/cdc_schema.py).
+    # any key of _ENVELOPE_PARSERS: one of the twelve CDC dialects
+    # ("datastream", the reference's envelope, by default) or "auto"
+    # (per-line dispatch for mixed streams). Everything downstream of the
+    # parse — registry route, payload decode, enrich, sinks, dead-letter —
+    # is envelope-agnostic (sources/cdc_schema.py).
     envelope_format: str = "datastream"
     kafka_options: dict[str, str] = field(default_factory=dict)
     # exactly-once via the manifest commit log (streaming/commitlog.py);
@@ -205,6 +205,13 @@ class CdcIngest:
     partition_granularity: str | None = "day"
     _queries: list[StreamingQuery] = field(default_factory=list)
     _registry_mtime: int | None = field(default=None, repr=False)
+
+    def __post_init__(self) -> None:
+        if self.partition_granularity not in ("day", "month", None):
+            raise ValueError(
+                "partition_granularity must be 'day', 'month' or None, "
+                f"got {self.partition_granularity!r}"
+            )
 
     @property
     def _partition_col(self) -> str | None:

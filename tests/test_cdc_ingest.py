@@ -193,6 +193,21 @@ def test_day_partitions_match_month_partitions(ingested, ingested_single_pass):
     assert ingested_single_pass.dead_letter().count() == 2
 
 
+@pytest.mark.parametrize("granularity", ["week", "Day"])
+def test_unknown_partition_granularity_rejected(spark, tmp_path, granularity):
+    """Only "day", "month" and None name a layout; any other value fails
+    at construction instead of silently writing month partitions."""
+    with pytest.raises(ValueError, match="partition_granularity"):
+        CdcIngest(
+            spark=spark,
+            registry=SchemaRegistry.from_dict(REGISTRY_DOC),
+            input_dir=str(tmp_path / "in"),
+            output_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ck"),
+            partition_granularity=granularity,
+        )
+
+
 def test_single_pass_month_partition_dirs(ingested_single_pass):
     import glob
     dirs = glob.glob(

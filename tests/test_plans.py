@@ -174,23 +174,6 @@ def test_kmeans_ivf_centroids_broadcast_every_round(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_stream_decontaminate_static_side_single_row_broadcast(spark):
-    """Batch twin of the stream-static plan: the eval side collapses to one
-    array row and broadcasts; the doc side must carry no join-key shuffle."""
-    from cdc_streamming___v2_spark.sources.tables import load_table
-    from cdc_streamming___v2_spark.streaming import corpus as C
-    from cdc_streamming___v2_spark.operators import pipeline_ops as P
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    is_eval = F.col("doc_id") % P.DECON_EVAL_MOD == 0
-    p = _plan(
-        spark, C.decontaminate_stream(docs.filter(~is_eval), docs.filter(is_eval))
-    )
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
-    assert "SortMergeJoin" not in p
-
-
 def test_seq_packing_no_global_window(spark):
     """The whole point of the two-pass prefix sum: no empty-partition-key
     window over the full corpus (which Spark executes in ONE task)."""

@@ -1,6 +1,6 @@
-"""Streaming window/stateful operator tests: drive each streaming query to
-completion with availableNow + memory sink and compare against the batch
-equivalent computed on the same data."""
+"""Stream-stream interval join: drive the streaming query to completion
+with availableNow + memory sink and compare against the oracle-checked
+batch range join computed on the same data."""
 
 from __future__ import annotations
 
@@ -10,8 +10,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from cdc_streamming___v2_spark.operators.event_windows import interval_join_streams
 from cdc_streamming___v2_spark.sources.tables import load_table, normalize_event_ts
-from cdc_streamming___v2_spark.streaming import windows as W
 
 from .conftest import SF_SMALL
 
@@ -52,124 +52,6 @@ def _batch_events(spark):
     return load_table(spark, SF_SMALL, "events")
 
 
-def test_tumbling_counts_matches_batch(spark, events_dir):
-    name = _run(W.tumbling_counts(_stream(spark, events_dir)))
-    got = {
-        (r.win_start, r.event_type): (r.n_events, round(r.sum_value, 2))
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    # append mode emits only windows SEALED by the final watermark
-    # (max_ts - 1h); later windows correctly remain in state
-    import datetime as dt
-
-    max_ts = _batch_events(spark).agg(F.max("ts")).first()[0]
-    horizon = max_ts - dt.timedelta(hours=1)
-    want = {
-        (r.start, r.event_type): (r.n, round(r.s, 2))
-        for r in _batch_events(spark)
-        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .select(
-            F.col("w.start").alias("start"),
-            F.col("w.end").alias("end"),
-            "event_type",
-            "n",
-            "s",
-        )
-        .collect()
-        if r.end <= horizon
-    }
-    assert got == want and len(got) > 0
-
-
-def _horizon(spark, wm_hours=1):
-    import datetime as dt
-
-    max_ts = _batch_events(spark).agg(F.max("ts")).first()[0]
-    return max_ts - dt.timedelta(hours=wm_hours)
-
-
-def test_sliding_avg_two_windows_per_event(spark, events_dir):
-    name = _run(W.sliding_avg(_stream(spark, events_dir)))
-    rows = spark.sql(f"select * from {name}").collect()
-    horizon = _horizon(spark)
-    # every emitted window is sealed, and every event in a sealed window is
-    # counted twice (12h window, 6h slide)
-    assert len(rows) > 0
-    assert all(r.win_end <= horizon for r in rows)
-    # sanity: counts are consistent with batch for one fully-covered window
-    w0 = min(rows, key=lambda r: r.win_start)
-    batch_n = (
-        _batch_events(spark)
-        .filter((F.col("ts") >= w0.win_start) & (F.col("ts") < w0.win_end))
-        .count()
-    )
-    assert w0.n_events == batch_n
-
-
-def test_session_counts_streaming(spark, events_dir):
-    name = _run(W.session_counts(_stream(spark, events_dir)))
-    rows = spark.sql(f"select * from {name}").collect()
-    assert len(rows) > 0
-    horizon = _horizon(spark)
-    # only sealed sessions are emitted, bounds consistent, no user twice
-    # for overlapping spans
-    for r in rows:
-        assert r.sess_start <= r.sess_end <= horizon
-    # emitted sessions match the batch gaps-and-islands construction
-    from cdc_streamming___v2_spark.operators.event_windows import session_agg
-
-    import datetime as dt
-
-    gap = dt.timedelta(minutes=30)
-    batch = {
-        (r.user_id, r.sess_start, r.n_events, round(r.sum_value, 2))
-        for r in session_agg(spark, SF_SMALL).collect()
-        if r.sess_end + gap <= horizon
-    }
-    got = {
-        (r.user_id, r.sess_start, r.n_events, round(r.sum_value, 2))
-        for r in rows
-    }
-    assert got == batch
-
-
-def test_dedup_stream_drops_replays(spark, tmp_path, events_dir):
-    """Write the same file twice under different names -> replayed ids must
-    be dropped by dropDuplicatesWithinWatermark."""
-    import shutil
-
-    d = tmp_path / "dup_stream"
-    d.mkdir()
-    src = os.path.join(SF_SMALL, "events.parquet")
-    # materialize the symlink target as real files so both copies differ by name
-    shutil.copyfile(src, d / "a.parquet")
-    shutil.copyfile(src, d / "b.parquet")
-    schema = spark.read.parquet(str(d)).schema
-    s = normalize_event_ts(spark.readStream.schema(schema).parquet(str(d)))
-    name = _run(W.dedup_stream(s))
-    n = spark.sql(f"select count(distinct event_id) c, count(*) n from {name}").first()
-    total = _batch_events(spark).count()
-    assert n.n == total  # each id exactly once despite double input
-    assert n.c == total
-
-
-def test_running_user_totals_stateful(spark, events_dir):
-    name = _run(W.running_user_totals(_stream(spark, events_dir)), mode="update")
-    rows = spark.sql(
-        f"select user_id, max(n_events) n, max(total_value) t from {name} group by user_id"
-    ).collect()
-    batch = {
-        r.user_id: (r.n, round(r.t, 2))
-        for r in _batch_events(spark)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    got = {r.user_id: (r.n, round(r.t, 2)) for r in rows}
-    assert got == batch
-
-
 def test_interval_join_streams_matches_batch(spark, events_dir):
     """Stream-stream interval join totals must equal the oracle-checked
     batch range join (operators/temporal.range_join_error_clicks)."""
@@ -178,7 +60,7 @@ def test_interval_join_streams_matches_batch(spark, events_dir):
     s = _stream(spark, events_dir)
     errors = s.filter(F.col("event_type") == "error")
     clicks = s.filter(F.col("event_type") == "click")
-    name = _run(W.interval_join_streams(errors, clicks))
+    name = _run(interval_join_streams(errors, clicks))
     got = (
         spark.table(name)
         .groupBy("error_id")
@@ -192,153 +74,6 @@ def test_interval_join_streams_matches_batch(spark, events_dir):
         if r.n_clicks_10m > 0
     }
     assert got_counts == want
-
-
-def test_enrich_stream_static_matches_batch_join(spark, events_dir):
-    # dim: per-user first event type from the batch table (any static frame)
-    dim = (
-        _batch_events(spark)
-        .groupBy("user_id")
-        .agg(F.min("event_type").alias("first_type"))
-    )
-    enriched = W.enrich_stream_static(
-        _stream(spark, events_dir).select("event_id", "user_id"), dim, "user_id"
-    )
-    name = _run(enriched)
-    got = {
-        r.event_id: r.first_type
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    want = {
-        r.event_id: r.first_type
-        for r in _batch_events(spark)
-        .select("event_id", "user_id")
-        .join(dim, "user_id", "left")
-        .collect()
-    }
-    assert got == want
-    assert len(got) == _batch_events(spark).count()
-
-
-def test_kmv_stream_matches_batch_sketch(spark, events_dir):
-    from cdc_streamming___v2_spark.operators import sketches as S
-
-    name = _run(W.kmv_distinct_stream(_stream(spark, events_dir)), mode="update")
-    got = {
-        r.event_type: r.est_distinct
-        for r in spark.sql(f"select * from {name}").collect()
-    }
-    want = {
-        r.event_type: r.est_distinct
-        for r in S.kmv_distinct(spark, SF_SMALL).collect()
-    }
-    assert got == want
-
-
-def test_quantile_sketch_stream_merges_across_batches(spark, tmp_path):
-    """Split events into two files -> two micro-batches; the final emission
-    per event_type must equal an exact replica of the histogram estimator
-    computed over ALL the data (bin counts merged by addition), and an
-    intermediate emission with smaller n must exist (proof of statefulness).
-    """
-    ev = _batch_events(spark).select("event_id", "ts", "event_type", "value")
-    d = str(tmp_path / "split")
-    ev.filter("event_id % 2 = 0").write.parquet(os.path.join(d, "a.parquet"))
-    ev.filter("event_id % 2 = 1").write.parquet(os.path.join(d, "b.parquet"))
-
-    lo, hi = ev.agg(
-        F.min(F.col("value").cast("double")), F.max(F.col("value").cast("double"))
-    ).first()
-    bins, probes = 128, (0.5, 0.9, 0.99)
-
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-    )
-    name = _run(
-        W.quantile_sketch_stream(stream, lo=lo, hi=hi, bins=bins, probes=probes),
-        mode="update",
-    )
-    rows = spark.sql(f"select * from {name}").collect()
-
-    # exact replica over all data
-    width = (hi - lo) / bins
-    want = {}
-    by_type = {}
-    for r in ev.select("event_type", F.col("value").cast("double")).collect():
-        if r[1] is not None:
-            by_type.setdefault(r[0], []).append(float(r[1]))
-    for et, xs in by_type.items():
-        counts = [0] * bins
-        for x in xs:
-            counts[min(max(int((x - lo) // width), 0), bins - 1)] += 1
-        n = len(xs)
-        for p in probes:
-            target, running = p * n, 0
-            for i, c in enumerate(counts):
-                running += c
-                if c > 0 and running >= target:
-                    want[(et, p)] = (
-                        lo + i * width + (target - (running - c)) / c * width,
-                        n,
-                    )
-                    break
-
-    # final emission per key = the one with the largest n
-    got = {}
-    for r in rows:
-        k = (r.event_type, r.p)
-        if k not in got or r.n > got[k][1]:
-            got[k] = (r.est_q, r.n)
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][1] == want[k][1]
-        assert got[k][0] == pytest.approx(want[k][0], rel=1e-9)
-    # two micro-batches -> an earlier, smaller-n emission exists per type
-    assert any(r.n < got[(r.event_type, r.p)][1] for r in rows)
-
-
-def test_quantile_sketch_stream_rejects_bad_range(spark, events_dir):
-    with pytest.raises(ValueError, match="hi > lo"):
-        W.quantile_sketch_stream(_stream(spark, events_dir), lo=5.0, hi=5.0)
-
-
-def test_decontaminate_stream_matches_batch(spark, tmp_path):
-    """Stream the documents table through the stream-static decontamination
-    plan; flagged docs and their shared counts must equal the batch
-    operator, and the clean stream must equal decontaminated_corpus."""
-    from cdc_streamming___v2_spark.operators import pipeline_ops as P
-    from cdc_streamming___v2_spark.streaming import corpus as C
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    is_eval = F.col("doc_id") % P.DECON_EVAL_MOD == 0
-    d = str(tmp_path / "docs")
-    docs.filter(~is_eval).write.parquet(d)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(d).schema
-    ).parquet(d)
-    flagged = C.decontaminate_stream(stream, docs.filter(is_eval))
-    name = _run(flagged)
-    out = spark.sql(f"select doc_id, n_shared from {name}")
-
-    want_bad = {
-        (r.doc_id, r.n_shared)
-        for r in P.decontaminate(spark, SF_SMALL).collect()
-    }
-    got_bad = {
-        (r.doc_id, r.n_shared) for r in out.filter("n_shared > 0").collect()
-    }
-    assert got_bad == want_bad
-
-    want_clean = {
-        r.doc_id for r in P.decontaminated_corpus(spark, SF_SMALL).collect()
-    }
-    got_clean = {r.doc_id for r in out.filter("n_shared = 0").collect()}
-    assert got_clean == want_clean
 
 
 @pytest.fixture(scope="module")
@@ -384,7 +119,7 @@ def test_interval_join_left_outer_flushes_unmatched_errors(
     errors = s.filter(F.col("event_type") == "error")
     clicks = s.filter(F.col("event_type") == "click")
     name = _run(
-        W.interval_join_streams(errors, clicks, how="leftOuter"),
+        interval_join_streams(errors, clicks, how="leftOuter"),
         mode="append",
     )
     rows = spark.sql(f"select * from {name}").collect()
@@ -403,728 +138,3 @@ def test_interval_join_left_outer_flushes_unmatched_errors(
     assert nulls, "watermark from batch 2 should flush early unmatched errors"
     assert nulls <= {k for k, v in oracle.items() if v == 0}
     assert not (nulls & set(matched))
-
-
-def test_near_dup_stream_matches_batch_incremental(spark, tmp_path):
-    """Stream the 'new batch' slice (doc_id % INCR_MOD == 0) through the
-    foreachBatch near-dup runner in TWO micro-batch files against the
-    static corpus index; the sink must equal the batch
-    incremental_near_dup operator exactly (ids and jaccard values)."""
-    from cdc_streamming___v2_spark.operators import dedup as D
-    from cdc_streamming___v2_spark.streaming import corpus as C
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    is_new = F.col("doc_id") % D.INCR_MOD == 0
-    new_docs, corpus = docs.filter(is_new), docs.filter(~is_new)
-
-    d = str(tmp_path / "newdocs")
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    new_docs.filter(F.col("doc_id") % 20 == 0).write.parquet(d + "/a.parquet")
-    new_docs.filter(F.col("doc_id") % 20 != 0).write.parquet(d + "/b.parquet")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d + "/*")
-    )
-    sink = str(tmp_path / "sink")
-    ck = str(tmp_path / "ck")
-    q = C.near_dup_stream(stream, corpus, sink, ck, available_now=True)
-    q.awaitTermination()
-
-    got = {
-        (r.doc_id, r.corpus_id, r.jaccard)
-        for r in spark.read.parquet(sink).collect()
-    }
-    want = {
-        (r.new_id, r.corpus_id, r.jaccard)
-        for r in D.incremental_near_dup(spark, SF_SMALL).collect()
-    }
-    assert want  # fixture really exercises the check (10 pairs at sf0.001)
-    assert got == want
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's python state-server protocol needs protobuf "
-    "(standard in real Spark 4 deployments; absent in this sandbox). "
-    "Round-5 resolution attempt (VERDICT r4 #8): pip/apt installs are "
-    "forbidden by the environment contract, no protobuf wheel exists "
-    "anywhere on disk (searched pip http cache and /opt), and the sandbox "
-    "has no network to vendor the pure-Python package from — the skip is "
-    "environmental, not a code gap; the applyInPandasWithState twin below "
-    "covers the same semantics and passes.",
-)
-def test_transform_with_state_matches_group_state_twin(spark, events_dir):
-    """Spark 4 transformWithStateInPandas twin must reproduce the
-    applyInPandasWithState operator's final per-user totals exactly."""
-    name = _run(
-        W.running_user_totals_tws(_stream(spark, events_dir)), mode="update"
-    )
-    rows = spark.sql(
-        f"select user_id, max(n_events) n, max(total_value) t from {name} "
-        "group by user_id"
-    ).collect()
-    batch = {
-        r.user_id: (r.n, round(r.t, 2))
-        for r in _batch_events(spark)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    got = {r.user_id: (r.n, round(r.t, 2)) for r in rows}
-    assert got == batch
-
-
-def test_event_run_encoder_matches_python_runs(spark, events_dir):
-    """Closed runs emitted by the stateful encoder == the batch run
-    decomposition minus each user's final (still-open) run."""
-    name = _run(W.event_run_encoder(_stream(spark, events_dir)))
-    got = sorted(
-        (r.user_id, r.event_type, r.run_len, r.start_event_id)
-        for r in spark.sql(f"select * from {name}").collect()
-    )
-
-    from collections import defaultdict
-
-    seqs = defaultdict(list)
-    for r in sorted(
-        _batch_events(spark).collect(), key=lambda r: (r.ts, r.event_id)
-    ):
-        seqs[r.user_id].append((r.event_type, r.event_id))
-    want = []
-    for uid, evs in seqs.items():
-        runs = []
-        for et, eid in evs:
-            if runs and runs[-1][0] == et:
-                runs[-1][1] += 1
-            else:
-                runs.append([et, 1, eid])
-        for et, n, start in runs[:-1]:  # last run per user is still open
-            want.append((uid, et, n, start))
-    assert got == sorted(want)
-
-
-def test_heavy_hitters_stream_misra_gries_guarantee(spark, events_dir):
-    """Final per-shard Misra-Gries summaries must (1) lower-bound true
-    counts within n_shard/(K+1) and (2) contain EVERY item whose true
-    shard frequency exceeds n_shard/(K+1) — the classic MG guarantee,
-    checked against exact batch counts."""
-    from collections import defaultdict
-
-    name = _run(W.heavy_hitters_stream(_stream(spark, events_dir)),
-                mode="update")
-    rows = spark.sql(f"select * from {name}").collect()
-    final_seq: dict = {}
-    for r in rows:
-        final_seq[r.shard] = max(final_seq.get(r.shard, 0), r.seq)
-    summary = defaultdict(dict)
-    for r in rows:
-        if r.seq == final_seq[r.shard]:
-            summary[r.shard][r.user_id] = r.lower_count
-
-    true = defaultdict(lambda: defaultdict(int))
-    shard_n = defaultdict(int)
-    for r in _batch_events(spark).collect():
-        sh = r.user_id % W.MG_SHARDS
-        true[sh][r.user_id] += 1
-        shard_n[sh] += 1
-
-    for sh, items in true.items():
-        slack = shard_n[sh] / (W.MG_K + 1)
-        for uid, cnt in items.items():
-            got = summary[sh].get(uid)
-            if cnt > slack:
-                assert got is not None, (sh, uid, cnt, slack)
-            if got is not None:
-                assert got <= cnt
-                assert got >= cnt - slack
-
-
-def test_ams_stream_merges_to_batch_sketch(spark, events_dir):
-    """Summing the final per-shard AMS sign vectors across shards must
-    reproduce the batch sketch's exact global S_r counters (linearity =
-    mergeability), hence the identical F2 estimate."""
-    import hashlib
-    from collections import defaultdict
-
-    from cdc_streamming___v2_spark.operators.sketches import AMS_R
-
-    name = _run(W.ams_f2_stream(_stream(spark, events_dir)), mode="update")
-    rows = spark.sql(f"select * from {name}").collect()
-    final_seq: dict = {}
-    for r in rows:
-        final_seq[r.shard] = max(final_seq.get(r.shard, 0), r.seq)
-    merged = defaultdict(int)
-    for r in rows:
-        if r.seq == final_seq[r.shard]:
-            merged[r.r] += r.s
-
-    expect = defaultdict(int)
-    for row in _batch_events(spark).collect():
-        uid = row.user_id
-        for r in range(AMS_R):
-            h = int(hashlib.md5(f"ams{r}|{uid}".encode()).hexdigest()[:8], 16)
-            expect[r] += 1 if h % 2 == 0 else -1
-    assert dict(merged) == dict(expect)
-
-
-def test_moments_stream_merges_to_exact_batch_moments(spark, events_dir):
-    """Summing the final per-(type, shard) integer moment vectors must
-    reproduce the EXACT batch count/sum/sum-of-squares per event type —
-    string-serialized bigints make the merge overflow-proof."""
-    from collections import defaultdict
-
-    name = _run(W.moments_stream(_stream(spark, events_dir)), mode="update")
-    rows = spark.sql(f"select * from {name}").collect()
-    final_seq: dict = {}
-    for r in rows:
-        k = (r.event_type, r.shard)
-        final_seq[k] = max(final_seq.get(k, 0), r.seq)
-    agg = defaultdict(lambda: [0, 0, 0])
-    for r in rows:
-        if r.seq == final_seq[(r.event_type, r.shard)]:
-            a = agg[r.event_type]
-            a[0] += r.n
-            a[1] += int(r.sum_cents)
-            a[2] += int(r.sumsq_cents)
-
-    true = defaultdict(lambda: [0, 0, 0])
-    for r in _batch_events(spark).collect():
-        c = round(r.value * 100)
-        t = true[r.event_type]
-        t[0] += 1
-        t[1] += c
-        t[2] += c * c
-
-    assert set(agg) == set(true)
-    for et in true:
-        assert agg[et] == true[et], et
-
-
-def test_sma_crossover_stream_matches_batch_recompute(spark, events_dir):
-    """The final-seq streaming crossover set must equal the batch
-    crossovers computed from the same exact integer daily sums — the
-    state's integer cent map makes the decision flip-proof."""
-    name = _run(W.sma_crossover_stream(_stream(spark, events_dir)), mode="update")
-    rows = spark.sql(f"select * from {name}").collect()
-    final_seq: dict = {}
-    for r in rows:
-        final_seq[r.event_type] = max(final_seq.get(r.event_type, 0), r.seq)
-    got = {
-        (r.event_type, r.day, r.direction)
-        for r in rows
-        if r.seq == final_seq[r.event_type]
-    }
-
-    # batch recompute with plain python on exact integer cents
-    from collections import defaultdict
-
-    daymaps: dict = defaultdict(lambda: defaultdict(int))
-    for r in _batch_events(spark).collect():
-        daymaps[r.event_type][str(r.ts.date())] += round(r.value * 100)
-    expect = set()
-    for et, dm in daymaps.items():
-        days = sorted(dm)
-        pref = [0]
-        for d in days:
-            pref.append(pref[-1] + dm[d])
-        above_prev = None
-        for i in range(len(days)):
-            if i + 1 < W.SMA_STREAM_SLOW:
-                continue
-            s_f = pref[i + 1] - pref[i + 1 - W.SMA_STREAM_FAST]
-            s_s = pref[i + 1] - pref[i + 1 - W.SMA_STREAM_SLOW]
-            above = W.SMA_STREAM_SLOW * s_f > W.SMA_STREAM_FAST * s_s
-            if above_prev is not None and above != above_prev:
-                expect.add((et, days[i], "golden" if above else "death"))
-            above_prev = above
-    assert got == expect and expect  # non-trivial: crossovers exist
-
-
-@pytest.fixture(scope="module")
-def orders_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("orders_stream")
-    os.symlink(
-        os.path.join(SF_SMALL, "orders.parquet"),
-        os.path.join(d, "orders.parquet"),
-    )
-    return str(d)
-
-
-def test_countmin_stream_equals_batch_sketch(spark, orders_dir):
-    """CMS counters are pure sums, so the streaming estimates must EQUAL
-    the batch countmin_freq estimates on the same keys — exact, not
-    approximate, equality (arrival-order independence)."""
-    from cdc_streamming___v2_spark.operators.sketches import countmin_freq
-
-    schema = spark.read.parquet(orders_dir).schema
-    keys = (
-        spark.readStream.schema(schema)
-        .parquet(orders_dir)
-        .select(F.col("o_custkey").cast("string").alias("key"))
-    )
-    name = _run(W.countmin_stream(keys), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    batch = {
-        r["custkey"]: r["est_count"]
-        for r in countmin_freq(spark, SF_SMALL)
-        .select("custkey", "est_count")
-        .collect()
-    }
-    probes = spark.createDataFrame(
-        [(str(k),) for k in batch], "key string"
-    )
-    got = {
-        int(r["key"]): r["est_count"]
-        for r in W.countmin_stream_estimates(emitted, probes).collect()
-    }
-    assert got == batch
-
-
-def test_kmv_stream_equals_batch_sketch(spark, events_dir):
-    """'k smallest of a union' is associative and order-independent, so
-    the streaming KMV estimate must EQUAL the batch kmv_distinct
-    estimate per group — exact equality, same md5 salt family."""
-    from cdc_streamming___v2_spark.operators.sketches import kmv_distinct
-
-    schema = spark.read.parquet(events_dir).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .select("event_type", "user_id")
-    )
-    name = _run(W.kmv_stream(ev), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    got = {
-        r["event_type"]: r["est_distinct"]
-        for r in W.kmv_stream_estimates(emitted).collect()
-    }
-    batch = {
-        r["event_type"]: r["est_distinct"]
-        for r in kmv_distinct(spark, SF_SMALL).collect()
-    }
-    assert got == batch
-
-
-@pytest.fixture(scope="module")
-def customer_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("customer_stream")
-    os.symlink(
-        os.path.join(SF_SMALL, "customer.parquet"),
-        os.path.join(d, "customer.parquet"),
-    )
-    return str(d)
-
-
-def test_bloom_stream_equals_batch_bits(spark, customer_dir):
-    """Set-bit union is associative and order-independent, so the
-    streaming Bloom bitset must EQUAL the batch bloom_prefilter's bits
-    frame exactly — and hence any probe's pass/false-positive verdicts
-    are identical between the paths."""
-    from cdc_streamming___v2_spark.operators.sketches import (
-        BLOOM_K,
-        _bloom_bits,
-        bloom_prefilter,
-    )
-
-    schema = spark.read.parquet(customer_dir).schema
-    keys = (
-        spark.readStream.schema(schema)
-        .parquet(customer_dir)
-        .filter(F.col("c_acctbal") > 9000)
-        .select(F.col("c_custkey").cast("string").alias("key"))
-    )
-    name = _run(W.bloom_stream(keys), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    got_bits = {
-        r["bit"] for r in W.bloom_stream_bits(emitted).collect()
-    }
-    c = spark.read.parquet(os.path.join(SF_SMALL, "customer.parquet"))
-    batch_bits = {
-        r["bit"]
-        for r in c.filter(F.col("c_acctbal") > 9000)
-        .select(
-            F.explode(
-                _bloom_bits(F.col("c_custkey").cast("string"))
-            ).alias("bit")
-        )
-        .distinct()
-        .collect()
-    }
-    assert got_bits == batch_bits and got_bits
-    # identical bitset -> identical probe verdicts: recompute the batch
-    # op's pass count against the STREAMED bits and compare
-    o = spark.read.parquet(os.path.join(SF_SMALL, "orders.parquet"))
-    bits_df = W.bloom_stream_bits(emitted)
-    probed = o.select(
-        "o_orderkey",
-        F.explode(
-            _bloom_bits(F.col("o_custkey").cast("string"))
-        ).alias("bit"),
-    )
-    n_pass = (
-        probed.join(F.broadcast(bits_df), "bit")
-        .groupBy("o_orderkey")
-        .agg(F.count("*").alias("h"))
-        .filter(F.col("h") == BLOOM_K)
-        .count()
-    )
-    batch_row = bloom_prefilter(spark, SF_SMALL).collect()[0]
-    assert n_pass == batch_row["n_bloom_pass"]
-
-
-def test_hll_stream_equals_batch_registers(spark, events_dir):
-    """Register max is associative and order-independent, so the decoded
-    streaming HLL estimate must EQUAL the batch register construction
-    per group — exact equality, same md5 'hll' salt and bin()-length
-    rho."""
-    from cdc_streamming___v2_spark.functions.texts import md5_hash_long
-    from cdc_streamming___v2_spark.operators.sketches import (
-        HLL_EST_NUM,
-        HLL_M,
-        HLL_VBITS,
-        HLL_VRANGE,
-    )
-
-    schema = spark.read.parquet(events_dir).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .select("event_type", "user_id")
-    )
-    name = _run(W.hll_stream(ev), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    got = {
-        (r["event_type"]): (r["n_regs"], r["n_zero_regs"], r["hll_est"])
-        for r in W.hll_stream_estimates(emitted).collect()
-    }
-
-    # batch twin over the identical data, identical expressions
-    b = _batch_events(spark).select("event_type", "user_id")
-    h = md5_hash_long(F.col("user_id").cast("string"), "hll")
-    v = h % HLL_VRANGE
-    regs = (
-        b.select(
-            "event_type",
-            F.floor(h / HLL_VRANGE).cast("int").alias("bucket"),
-            F.when(v == 0, HLL_VBITS + 1)
-            .otherwise(F.lit(HLL_VBITS + 1) - F.length(F.bin(v)))
-            .cast("int")
-            .alias("rho"),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("mj"))
-    )
-    g = regs.groupBy("event_type").agg(
-        F.count("*").alias("n_regs"),
-        F.sum(F.pow(F.lit(2.0), F.lit(HLL_VBITS + 1) - F.col("mj")))
-        .cast("long")
-        .alias("s_present"),
-    )
-    zeros = F.lit(HLL_M) - F.col("n_regs")
-    s = F.col("s_present") + zeros * F.lit(2 * HLL_VRANGE)
-    want = {
-        r["event_type"]: (r["n_regs"], r["n_zero_regs"], r["hll_est"])
-        for r in g.select(
-            "event_type",
-            F.col("n_regs").cast("bigint").alias("n_regs"),
-            zeros.cast("bigint").alias("n_zero_regs"),
-            F.round(F.lit(HLL_EST_NUM) / s, 2).alias("hll_est"),
-        ).collect()
-    }
-    assert got == want
-    # state is sharded: every (event_type, shard) combination emitted
-    shard_counts = (
-        emitted.groupBy("event_type")
-        .agg(F.countDistinct("shard").alias("ns"))
-        .collect()
-    )
-    assert all(r["ns"] == W.HLL_STREAM_SHARDS for r in shard_counts)
-
-
-def test_hll_stream_merges_across_microbatches(spark, tmp_path):
-    """Two maxFilesPerTrigger=1 micro-batches must merge register state:
-    the max-seq decode equals the all-data batch registers, and an
-    earlier emission exists (proof of statefulness)."""
-    ev = _batch_events(spark).select("event_id", "event_type", "user_id")
-    d = str(tmp_path / "split")
-    ev.filter("event_id % 2 = 0").write.parquet(os.path.join(d, "a.parquet"))
-    ev.filter("event_id % 2 = 1").write.parquet(os.path.join(d, "b.parquet"))
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-        .select("event_type", "user_id")
-    )
-    name = _run(W.hll_stream(stream), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    seqs = [r["seq"] for r in emitted.select("seq").distinct().collect()]
-    assert max(seqs) >= 2  # at least two state updates on some shard
-    est = {
-        r["event_type"]: r["hll_est"]
-        for r in W.hll_stream_estimates(emitted).collect()
-    }
-    # full-data streaming run over the unsplit directory agrees
-    full_ev = _batch_events(spark).select("event_type", "user_id")
-    # batch registers over all data
-    from cdc_streamming___v2_spark.functions.texts import md5_hash_long
-    from cdc_streamming___v2_spark.operators.sketches import (
-        HLL_EST_NUM,
-        HLL_M,
-        HLL_VBITS,
-        HLL_VRANGE,
-    )
-
-    h = md5_hash_long(F.col("user_id").cast("string"), "hll")
-    v = h % HLL_VRANGE
-    regs = (
-        full_ev.select(
-            "event_type",
-            F.floor(h / HLL_VRANGE).cast("int").alias("bucket"),
-            F.when(v == 0, HLL_VBITS + 1)
-            .otherwise(F.lit(HLL_VBITS + 1) - F.length(F.bin(v)))
-            .cast("int")
-            .alias("rho"),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("mj"))
-    )
-    g = regs.groupBy("event_type").agg(
-        F.count("*").alias("n_regs"),
-        F.sum(F.pow(F.lit(2.0), F.lit(HLL_VBITS + 1) - F.col("mj")))
-        .cast("long")
-        .alias("s_present"),
-    )
-    zeros = F.lit(HLL_M) - F.col("n_regs")
-    s = F.col("s_present") + zeros * F.lit(2 * HLL_VRANGE)
-    want = {
-        r["event_type"]: r["hll_est"]
-        for r in g.select(
-            "event_type",
-            F.round(F.lit(HLL_EST_NUM) / s, 2).alias("hll_est"),
-        ).collect()
-    }
-    assert est == want
-
-
-def test_schema_drift_stream_equals_batch_report(spark, tmp_path):
-    """count/min/max merge associatively, so the monitor's max-seq decode
-    must EQUAL the batch drift report over the same lines — split into
-    two micro-batches to prove state merging."""
-    from cdc_streamming___v2_spark.operators.cdc_batch import (
-        cdc_schema_drift_report,
-        drift_order_lines,
-    )
-    from cdc_streamming___v2_spark.sources.tables import load_table
-
-    o = load_table(spark, SF_SMALL, "orders")
-    lines = drift_order_lines(o).withColumn(
-        "half", (F.crc32(F.col("value")) % 2).cast("int")
-    )
-    d = str(tmp_path / "drift")
-    lines.filter("half = 0").select("value").write.text(os.path.join(d, "a"))
-    lines.filter("half = 1").select("value").write.text(os.path.join(d, "b"))
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(d)
-    )
-    name = _run(W.schema_drift_stream(stream), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    got = {
-        (r["object"], r["key"]): (
-            r["n_records"], r["first_seen"], r["last_seen"],
-        )
-        for r in W.schema_drift_stream_report(emitted).collect()
-    }
-    want = {
-        (r["object"], r["key"]): (
-            r["n_records"], r["first_seen"], r["last_seen"],
-        )
-        for r in cdc_schema_drift_report(spark, SF_SMALL).collect()
-    }
-    assert got == want
-    assert ("orders_feed", "o_totalprice") in got  # drift keys present
-    # statefulness: some key saw both micro-batches
-    assert emitted.agg(F.max("seq")).first()[0] >= 2
-
-
-def test_misra_gries_stream_guarantees(spark, events_dir):
-    """MG is order-dependent (no batch equality) — pin its GUARANTEES
-    instead: every estimate in [true - n_shard/(k+1), true], and every
-    key whose true count exceeds its shard's bound is present."""
-    import hashlib
-
-    schema = spark.read.parquet(events_dir).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .select("event_type", "user_id")
-    )
-    name = _run(W.misra_gries_stream(ev), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    rows = W.misra_gries_stream_topk(emitted, topn=50).collect()
-    est = {(r["event_type"], r["key"]): r for r in rows}
-
-    b = _batch_events(spark).select("event_type", "user_id").collect()
-    true_counts: dict = {}
-    shard_n: dict = {}
-    for r in b:
-        k = str(r["user_id"])
-        sh = (
-            int(hashlib.md5(f"mg{k}".encode()).hexdigest()[:8], 16)
-            % W.MG_SHARDS
-        )
-        true_counts[(r["event_type"], k)] = (
-            true_counts.get((r["event_type"], k), 0) + 1
-        )
-        shard_n[(r["event_type"], sh)] = (
-            shard_n.get((r["event_type"], sh), 0) + 1
-        )
-
-    def bound(et, k):
-        sh = (
-            int(hashlib.md5(f"mg{k}".encode()).hexdigest()[:8], 16)
-            % W.MG_SHARDS
-        )
-        return shard_n[(et, sh)] / (W.MG_K + 1)
-
-    # estimates never exceed truth and undercount at most the bound
-    for (et, k), r in est.items():
-        t = true_counts[(et, k)]
-        assert r["est_count"] <= t
-        assert r["est_count"] >= t - bound(et, k) - 1e-9
-    # survivors: true count above the shard bound => present in state
-    # (check via the FULL decoded state, not the top-N cut)
-    full = {
-        (r["event_type"], r["key"])
-        for r in W.misra_gries_stream_topk(emitted, topn=10**6).collect()
-    }
-    for (et, k), t in true_counts.items():
-        if t > bound(et, k):
-            assert (et, k) in full, (et, k, t, bound(et, k))
-
-
-def test_ddsketch_stream_equals_batch_buckets(spark, tmp_path):
-    """Bucket counters are pure sums, so the streaming DDSketch decode
-    must EQUAL the batch ddsketch_quantiles estimates on the same data —
-    two maxFilesPerTrigger micro-batches prove state merging."""
-    from cdc_streamming___v2_spark.operators.sketches import (
-        ddsketch_quantiles,
-    )
-    from cdc_streamming___v2_spark.sources.tables import load_table
-
-    o = load_table(spark, SF_SMALL, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    d = str(tmp_path / "split")
-    o.filter("o_orderkey % 2 = 0").write.parquet(os.path.join(d, "a.parquet"))
-    o.filter("o_orderkey % 2 = 1").write.parquet(os.path.join(d, "b.parquet"))
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-    )
-    name = _run(W.ddsketch_stream(stream), mode="update")
-    emitted = spark.sql(f"select * from {name}")
-    assert emitted.agg(F.max("seq")).first()[0] >= 2  # stateful merge
-    got = {
-        r["q"]: r["dd_estimate"]
-        for r in W.ddsketch_stream_quantiles(emitted).collect()
-    }
-    want = {
-        r["q"]: r["dd_estimate"]
-        for r in ddsketch_quantiles(spark, SF_SMALL).collect()
-    }
-    assert got == want
-
-
-def test_misra_gries_stream_delimiter_keys_roundtrip(spark, tmp_path):
-    """ADVICE r6: keys containing the state delimiters ':' / '|' (and the
-    escape char '%') must survive state serialization + restore across
-    micro-batches and decode back to the ORIGINAL keys with exact counts
-    (few distinct keys < MG_K, so MG is exact here)."""
-    import pandas as pd
-
-    hairy = ["a:b", "c|d", "x:y|z", "p%3Aq", "plain", "100%"]
-    rows = []
-    for i, k in enumerate(hairy):
-        rows += [("purchase", k)] * (i + 1)
-    d = str(tmp_path / "mgkeys")
-    os.makedirs(d)
-    pd.DataFrame(rows, columns=["event_type", "k"]).iloc[::2].to_parquet(
-        os.path.join(d, "a.parquet")
-    )
-    pd.DataFrame(rows, columns=["event_type", "k"]).iloc[1::2].to_parquet(
-        os.path.join(d, "b.parquet")
-    )
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(d).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    name = _run(
-        W.misra_gries_stream(ev, key_col="k", group_col="event_type"),
-        mode="update",
-    )
-    emitted = spark.sql(f"select * from {name}")
-    assert emitted.agg(F.max("seq")).first()[0] >= 2  # state restored
-    got = {
-        r["key"]: r["est_count"]
-        for r in W.misra_gries_stream_topk(emitted, topn=100).collect()
-    }
-    assert got == {k: i + 1 for i, k in enumerate(hairy)}
-
-
-def test_ddsketch_stream_nonpositive_rows_are_not_poison(spark, tmp_path):
-    """ADVICE r6: a cents <= 0 row used to null F.log and kill the
-    streaming query inside the update kernel; the domain filter must
-    drop it and leave the positive-domain buckets equal to a batch
-    DDSketch of the positive rows only."""
-    import pandas as pd
-
-    d = str(tmp_path / "dds")
-    os.makedirs(d)
-    pd.DataFrame({"cents": [100, 250, -5, 999]}).to_parquet(
-        os.path.join(d, "a.parquet")
-    )
-    pd.DataFrame({"cents": [0, 4200, 77]}).to_parquet(
-        os.path.join(d, "b.parquet")
-    )
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    name = _run(W.ddsketch_stream(stream), mode="update")  # must not raise
-    emitted = spark.sql(f"select * from {name}")
-    # decode final per-shard counters -> total count == positive rows only
-    from pyspark.sql import Window as SqlWindow
-
-    wseq = SqlWindow.partitionBy("shard").orderBy(F.col("seq").desc())
-    final = (
-        emitted.withColumn("rn", F.row_number().over(wseq))
-        .filter("rn = 1")
-        .select(F.explode(F.split("counters", "\\|")).alias("e"))
-        .filter("e != ''")
-        .select(F.split("e", ":").getItem(1).cast("long").alias("c"))
-    )
-    assert final.agg(F.sum("c")).first()[0] == 5
